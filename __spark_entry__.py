@@ -3,8 +3,8 @@
 ``entry(spark)`` smoke-runs the reconciliation core on sf0.001;
 ``queries()`` maps every implemented operator from SURVEY.md §2 onto the
 driver testdata tables; ``oracle_sql()`` provides the DuckDB-equivalent
-SQL for each (omitted only for xxhash64/blake2b/indel-UDF-based
-operators, which have no SQL equivalent — those get rows-only checks).
+SQL for each (omitted only for the indel-UDF and ER-pipeline queries,
+which have no SQL equivalent — those get rows-only checks).
 """
 
 from __future__ import annotations
@@ -71,7 +71,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # LSH dedup, oracle-checked configs (guaranteed-recall settings)
         "minhash_lsh_pairs": dq.q_minhash_lsh_pairs,
         "simhash_pairs": dq.q_simhash_pairs,
-        # rows-only (no SQL equivalent: blake2b / indel kernels)
+        # rows-only (no SQL equivalent: indel kernel / ER pipeline)
         "indel_ratio_pairs": dq.q_indel_ratio_pairs,
         "er_link_clusters": dq.q_er_link_clusters,
     }

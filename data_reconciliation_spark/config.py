@@ -170,7 +170,6 @@ class BlockingConfig:
     use_host_key: bool = True     # normalized-URL-host blocking
     use_minhash_bands: bool = True
     salt_hot_keys: bool = True    # salted repartition for hot hosts
-    hot_key_threshold: int = 10_000   # rows per block before salting kicks in
     # Blocks above this member count are excluded from pairwise candidate
     # generation (a 500-member block is already 125k pairs).  Content-based
     # MinHash bands retain recall inside oversized host blocks — a hot host
@@ -181,14 +180,6 @@ class BlockingConfig:
     # joined back from a compact mapping afterwards.  Hash collisions can
     # only add candidates (verified by scoring), never drop true pairs.
     dictionary_ids: bool = True
-    # MinHash signature kernel: "arrow" = native per-shingle xxhash64 +
-    # vectorized numpy lane-min over Arrow batches (measured ~15x faster
-    # than the interpreted Catalyst fold on the block-table build);
-    # "native" = pure Catalyst aggregate fold (zero Python — for
-    # environments where Python workers are unavailable).  Signature
-    # VALUES differ between kernels; nothing downstream depends on them
-    # beyond determinism + min-wise uniformity.
-    minhash_kernel: str = "arrow"
 
     @property
     def rows_per_band(self) -> int:
@@ -202,7 +193,6 @@ class ScoringConfig:
     """Thresholds for pair verdicts (engine extension over reference
     F1-F3 semantics, ``compare.py:326-403``)."""
 
-    url_jw_threshold: float = 0.90       # Jaro-Winkler on normalized URL path
     title_jw_threshold: float = 0.95     # Jaro-Winkler on page title
     token_jaccard_threshold: float = 0.70
     simhash_max_hamming: int = 8

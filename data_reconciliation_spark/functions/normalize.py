@@ -118,16 +118,3 @@ def prepare_snapshot(df: DataFrame, fields: dict[str, FieldRule]) -> DataFrame:
     df = canonicalize_columns(df)
     df = apply_renames(df, fields)
     return apply_cleaning(df, fields)
-
-
-def normalize_pages(df: DataFrame, use_html_extraction: bool = False) -> DataFrame:
-    """Add the engine's derived columns to a raw page table:
-    ``norm_host``, ``canon_url``, ``norm_text`` (and re-extracted
-    ``text`` from html when requested)."""
-    if use_html_extraction:
-        df = df.withColumn("text", extract_text_from_html("html"))
-    return (
-        df.withColumn("norm_host", normalized_host("url"))
-        .withColumn("canon_url", canonical_url("url"))
-        .withColumn("norm_text", normalized_text("text"))
-    )

@@ -1,5 +1,5 @@
 """Similarity kernels: indel ratio (rapidfuzz.fuzz.ratio parity),
-Jaro-Winkler, token Jaccard, 64-bit SimHash.
+Jaro-Winkler, token Jaccard, 64-bit md5-nibble SimHash.
 
 The reference's only similarity function is ``rapidfuzz.fuzz.ratio``
 (reference ``backend/analysis/compare.py:370``), a normalized InDel
@@ -12,6 +12,11 @@ arbitrary-precision ints give the bit-parallelism for free).
 All kernels are exposed to Spark exclusively through Arrow-batched
 ``pandas_udf`` wrappers (the engine's single sanctioned Python extension
 point; SURVEY.md §2.10).  Pure-Python versions double as the test oracle.
+
+SimHash has one family and one Spark kernel: the token hash is the first
+16 hex nibbles of md5 (so DuckDB reproduces every signature from
+``md5()``), and :func:`attach_simhash64_md5` computes it for both ER
+scoring and ``simhash_pairs``.
 """
 
 from __future__ import annotations
@@ -28,16 +33,12 @@ __all__ = [
     "indel_ratio_py",
     "jaro_winkler_py",
     "token_jaccard_py",
-    "simhash64_py",
     "hamming64_py",
     "indel_ratio_udf",
     "jaro_winkler_udf",
-    "simhash64_udf",
-    "simhash64_native",
     "simhash64_md5_py",
+    "attach_simhash64_md5",
 ]
-# (simhash64_native returns the final signed int64 directly; the packed
-# lane accumulator is internal.)
 
 
 # ---------------------------------------------------------------------------
@@ -382,40 +383,6 @@ def token_jaccard_py(a: str | None, b: str | None) -> float | None:
     return len(sa & sb) / union if union else 1.0
 
 
-def _stable_hash64(token: str) -> int:
-    """Deterministic 64-bit token hash (blake2b; stable across processes,
-    unlike Python's salted ``hash``)."""
-    return int.from_bytes(
-        hashlib.blake2b(token.encode("utf-8"), digest_size=8).digest(), "big"
-    )
-
-
-def simhash64_py(s: str | None) -> int | None:
-    """64-bit SimHash over whitespace tokens.  Returned as a *signed* int64
-    (two's complement) so it round-trips through Spark LongType."""
-    if s is None:
-        return None
-    toks = _tokens(s)
-    if not toks:
-        return 0
-    acc = np.zeros(64, dtype=np.int64)
-    one = np.uint64(1)
-    for tok in toks:
-        h = _stable_hash64(tok)
-        bits = np.unpackbits(
-            np.frombuffer(h.to_bytes(8, "big"), dtype=np.uint8)
-        ).astype(np.int64)
-        acc += bits * 2 - 1
-    out = 0
-    for i, v in enumerate(acc):  # acc[0] is the MSB
-        if v > 0:
-            out |= 1 << (63 - i)
-    # to signed int64
-    if out >= 1 << 63:
-        out -= 1 << 64
-    return out
-
-
 def hamming64_py(x: int | None, y: int | None) -> int | None:
     if x is None or y is None:
         return None
@@ -440,25 +407,18 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(jaro_winkler_batch(list(a), list(b)), index=a.index)
 
 
-@pandas_udf(T.LongType())
-def simhash64_udf(s: pd.Series) -> pd.Series:
-    return pd.Series([simhash64_py(x) for x in s], index=s.index, dtype="object").astype(
-        "Int64"
-    )
-
-
 # ---------------------------------------------------------------------------
-# Native (JVM-side) SimHash — md5-nibble hash, zero Python, and exactly
-# reproducible in ANSI SQL (DuckDB), so the driver's oracle can verify it.
+# md5-nibble SimHash — exactly reproducible in ANSI SQL (DuckDB), so the
+# driver's oracle can verify it.
 # ---------------------------------------------------------------------------
 
 def simhash64_md5_py(s: str | None) -> int | None:
-    """Pure-Python oracle for :func:`simhash64_native` (NOT the blake2b
-    :func:`simhash64_py`): tokens are space-split (empties kept, matching
-    ``F.split(s, ' ')``), each token's 64-bit hash is the first 16 hex
-    nibbles of its md5, bit j of the signature is the sign of the sum of
-    bit j over tokens.  Returns signed int64; None beyond 16383 tokens
-    (mirrors simhash64_native's exact-range guard)."""
+    """Pure-Python oracle for :func:`attach_simhash64_md5`: tokens are
+    space-split (empties kept, matching ``F.split(s, ' ')``), each
+    token's 64-bit hash is the first 16 hex nibbles of its md5, bit j of
+    the signature is the sign of the sum of bit j over tokens.  Returns
+    signed int64; None beyond 16383 tokens (the exact-range guard the
+    DuckDB oracle ``SQL_SIMHASH`` mirrors)."""
     if s is None:
         return None
     toks = s.split(" ")
@@ -480,108 +440,13 @@ def simhash64_md5_py(s: str | None) -> int | None:
     return out
 
 
-def simhash64_native(text: "F.Column | str") -> "F.Column":
-    """64-bit SimHash (signed int64) as pure Catalyst expressions.
-
-    Token hash = first 16 hex nibbles of md5(token).  The 64 per-bit
-    sums are packed into 16 longs of four 15-bit lanes at bit offsets
-    0/15/30/45 (bits 0-59 — the long sign bit is never touched, so the
-    packed adds can never throw ARITHMETIC_OVERFLOW under Spark 4.x
-    default ANSI mode): per token the fold does one md5, 16
-    substr+conv, and 16 packed adds — no per-bit array allocation.
-    Lane k of long i accumulates ``2 * bit`` for bit j = 4i+k (j=0 is
-    the md5 MSB nibble's top bit), so lane > n_tokens  <=>  the signed
-    bit-sum is positive — no bias, no negative lanes.  15-bit lanes are
-    exact up to 16383 tokens; BEYOND that the signature is NULL by an
-    explicit guard (a lane would silently carry into its neighbor) —
-    split longer texts upstream.  The driver oracle (SQL_SIMHASH)
-    mirrors the NULL rule.  An earlier 16-bit-lane packing put the top
-    lane at bits 48-63 and crossed the sign bit beyond 16383 tokens,
-    throwing under ANSI mode; a 21-bit/22-long variant was exact to
-    2^20 tokens but cost 4x per token in interpreted HOF evaluation
-    (64 element_at vs 16) — measured 10.5s vs ~5s per 5000 docs.
-
-    All intermediate values (md5 array, nibble arrays, packed sums,
-    token count) are bound as HOF lambda variables: interpreted
-    higher-order-function evaluation re-evaluates any non-variable
-    sub-expression once per element, which is the difference between
-    one md5 per token and 64.
-
-    Deterministic across engines: DuckDB reproduces the identical value
-    from ``md5()`` + integer arithmetic (SQL_SIMHASH), which is what
-    makes ``simhash_pairs`` driver-oracle-checkable.  Bit j of the
-    signature lands at position 63-j; the sign bit is handled by
-    subtraction so no long literal overflows (ANSI mode safe).
-    """
-    text = F.col(text) if isinstance(text, str) else text
-    toks = F.split(text, " ")
-    mds = F.transform(toks, lambda t: F.md5(t))
-    nib_arrays = F.transform(
-        mds,
-        lambda m: F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda i: F.conv(F.substr(m, i, F.lit(1)), 16, 10).cast("long"),
-        ),
-    )
-
-    def delta(v):
-        # four 15-bit lanes per long (offsets 0/15/30/45, bits 0-59):
-        # lane k += 2*bit(3-k of nibble); all terms non-negative and the
-        # sign bit is unreachable, so ANSI adds cannot throw
-        parts = [
-            F.shiftleft(F.shiftright(v, 3 - k).bitwiseAND(F.lit(1)), 15 * k + 1)
-            for k in range(4)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.bitwiseOR(p)
-        return out
-
-    zeros16 = F.array_repeat(F.lit(0).cast("long"), 16)
-    acc16 = F.aggregate(
-        nib_arrays,
-        zeros16,
-        lambda acc, nibs: F.zip_with(acc, nibs, lambda a, v: a + delta(v)),
-    )
-
-    def assemble(s):
-        a16, n = s["acc"], s["n"]
-        lane_mask = F.lit((1 << 15) - 1)
-
-        def lane(j):
-            i, k = divmod(j, 4)
-            return F.shiftright(F.element_at(a16, i + 1), 15 * k).bitwiseAND(
-                lane_mask
-            )
-
-        pos = None
-        for j in range(1, 64):
-            term = F.when(lane(j) > n, F.lit(1 << (63 - j))).otherwise(
-                F.lit(0).cast("long")
-            )
-            pos = term if pos is None else pos + term
-        sign = F.when(lane(0) > n, F.lit(-9223372036854775808)).otherwise(
-            F.lit(0).cast("long")
-        )
-        # NULL beyond the exact range: a 15-bit lane would silently
-        # carry into its neighbor past 16383 tokens (SQL oracle mirrors
-        # this rule; null signatures drop out of all chunk equi-joins)
-        return F.when(n <= 16383, pos + sign)
-
-    packed = F.array(
-        F.struct(acc16.alias("acc"), F.size(toks).cast("long").alias("n"))
-    )
-    return F.element_at(F.transform(packed, assemble), 1)
-
-
 @pandas_udf(T.LongType())
 def simhash64_md5_batch_udf(hashes: pd.Series) -> pd.Series:
     """Vectorized md5-nibble SimHash vote: input = per-document array of
     64-bit token hashes (first 16 md5 hex nibbles, computed natively);
-    output BIT-EXACT to :func:`simhash64_native` /
-    :func:`simhash64_md5_py` (differential-tested).  None for null
-    input or > 16383 tokens (the native exact-range guard, mirrored so
-    the SQL oracle stays valid for either kernel)."""
+    output BIT-EXACT to :func:`simhash64_md5_py` (differential-tested).
+    None for null input or > 16383 tokens: the frozen DuckDB oracle
+    (``SQL_SIMHASH``) returns NULL there, so the kernel must too."""
     rows = hashes.to_numpy()
     n = len(rows)
     lens = np.fromiter(
@@ -628,14 +493,16 @@ def simhash64_md5_batch_udf(hashes: pd.Series) -> pd.Series:
 
 
 def attach_simhash64_md5(df, text, out_col: str):
-    """Attach the md5-nibble SimHash as ``out_col`` via the Arrow
-    kernel — same value as ``simhash64_native`` (so the DuckDB oracle
-    needs no change) at a fraction of the cost: per token the NATIVE
-    side does one md5 + two 8-hex ``conv`` (vs 16 substr+conv and 16
-    packed adds in the interpreted fold), and the 64-lane vote runs
-    vectorized in numpy.  Plan shape follows
-    ``blocking.attach_minhash_signature``: UDF over a bare attribute
-    between two explode-of-one Generate barriers.
+    """Attach the md5-nibble SimHash of the space-split ``text`` as
+    ``out_col`` (signed int64; NULL for null text or > 16383 tokens).
+
+    The engine's one SimHash kernel, used by ER scoring
+    (``scoring.prepare_pages``) and ``dedup.simhash_pairs``.  Per token
+    the native side does one md5 + two 8-hex ``conv`` (whole-stage
+    codegen), and the 64-lane vote runs vectorized in numpy over the
+    Arrow batch.  Plan shape follows ``blocking.attach_minhash_signature``:
+    UDF over a bare attribute between two explode-of-one Generate
+    barriers.
     """
     text = F.col(text) if isinstance(text, str) else text
     toks = F.split(text, " ")
@@ -686,13 +553,3 @@ def levenshtein_similarity(a, b):
     return F.when(max_len == 0, F.lit(100.0)).otherwise(
         100.0 * (1.0 - F.levenshtein(a, b) / max_len)
     )
-
-
-def native_token_jaccard(a, b):
-    """Whitespace-token-set Jaccard as native array expressions."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    ta = F.array_distinct(F.split(F.trim(a), r"\s+"))
-    tb = F.array_distinct(F.split(F.trim(b), r"\s+"))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)

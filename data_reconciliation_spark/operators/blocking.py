@@ -10,10 +10,12 @@ candidate-generation keys instead (SURVEY.md §2.3 "similarity join"):
   near-duplicate texts collide on at least one band key with high
   probability
 
-Everything is native Catalyst expressions (xxhash64 inside higher-order
-functions) — signature computation is map-only, embarrassingly parallel,
-and whole-stage-codegen'd.  No Python, no ml.Vector overhead, and
-deterministic across cluster sizes.
+Shingling and the per-shingle xxhash64 are native Catalyst expressions;
+the 64-lane MinHash min runs in one Arrow kernel
+(:func:`attach_minhash_signature`, also used by
+``dedup.minhash_lsh_pairs``).  Signature computation is map-only,
+embarrassingly parallel, has no ml.Vector overhead, and is deterministic
+across cluster sizes.
 
 Skew: hot blocking keys (one host holding 20% of a crawl) are handled
 two ways — (a) oversized blocks are excluded from *pairwise* candidate
@@ -77,41 +79,6 @@ def dictionary_uid(col: Column) -> Column:
     return F.xxhash64(col)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 0) -> Column:
-    """array<bigint> MinHash signature: per hash-function i, the min of
-    ``xxhash64(xxhash64(shingle, seed), i)`` over all shingles.
-
-    Implemented as a single ``aggregate`` fold over the shingle array
-    (running element-wise min of a k-wide hash vector).  The obvious
-    alternative — ``transform(0..k-1, i -> array_min(transform(shingles,
-    s -> hash(s,i))))`` — re-evaluates the shingle expression per hash
-    function inside interpreted (non-codegen) HOF evaluation and measured
-    ~33x slower at k=64; the fold walks the shingles exactly once.
-
-    The shingle STRING is hashed exactly once (O(len)); the per-function
-    hashes re-hash only that 8-byte value (O(1) each), bound as a lambda
-    variable via a single-element transform so the string hash is not
-    re-evaluated per hash function.  Same derivation trick as Spark ML's
-    MinHashLSH (one base hash, k cheap rehashes), with full xxhash64
-    mixing instead of a linear congruence.
-    """
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-
-    def step(acc: Column, s: Column) -> Column:
-        return F.element_at(
-            F.transform(
-                F.array(F.xxhash64(s, F.lit(seed))),
-                lambda h: F.zip_with(
-                    acc, idx, lambda a, i: F.least(a, F.xxhash64(h, i))
-                ),
-            ),
-            1,
-        )
-
-    return F.aggregate(shingles, init, step)
-
-
 def _splitmix64(x):
     """Vectorized splitmix64 finalizer over a uint64 numpy array (public
     algorithm, Steele et al. 2014) — full-avalanche mixing so each lane
@@ -144,19 +111,14 @@ def minhash_signature_batch(num_hashes: int = 64, seed: int = 0):
     signature from an array of per-shingle hashes (use via
     :func:`attach_minhash_signature`, which owns the plan shape).
 
-    Same contract as :func:`minhash_signature` (per lane i, a min-wise
-    hash over the shingle set; identical shingle sets => identical
-    signatures at ANY parallelism) but ~15x cheaper at scale: the
-    shingle STRING is hashed once natively (one ``transform`` +
-    ``xxhash64`` pass, whole-stage codegen), and the 64-lane rehash +
-    min — pure integer mixing with no string work — runs as numpy
-    ``minimum.reduceat`` over the Arrow batch instead of an interpreted
-    Catalyst ``aggregate`` fold (measured 9.3s -> <1s for the 20k-page
-    block-table build; interpreted HOF evaluation pays per-element
-    expression-tree overhead that dominates the arithmetic).
-
-    The signature VALUES differ from :func:`minhash_signature` (xxhash64
-    lane mixing vs splitmix64): nothing downstream depends on the
+    Per lane i, a min-wise hash over the shingle set; identical shingle
+    sets => identical signatures at ANY parallelism.  The shingle STRING
+    is hashed once natively (one ``transform`` + ``xxhash64`` pass,
+    whole-stage codegen), and the 64-lane splitmix64 rehash + min — pure
+    integer mixing with no string work — runs as numpy
+    ``minimum.reduceat`` over the Arrow batch (measured ~15x cheaper
+    than an interpreted Catalyst ``aggregate`` fold: 9.3s -> <1s for the
+    20k-page block-table build).  Nothing downstream depends on the
     values, only on determinism and min-wise uniformity — band keys
     hash the signature, and the LSH recall guarantee (identical sets
     always collide; similar sets collide with prob ~J^r per band) holds
@@ -224,8 +186,7 @@ def attach_minhash_signature(
        extract over cached inputs (observed: raw PythonUDF left in an
        interpreted projection -> INTERNAL_ERROR 'Cannot evaluate
        expression' at execution);
-    2. the UDF runs over the resulting BARE ATTRIBUTE (the same proven
-       shape as scoring's ``simhash64_udf``), and its output passes
+    2. the UDF runs over the resulting BARE ATTRIBUTE, and its output passes
        through a second barrier so downstream repartition / shuffle-
        partitioner expressions reference the Generate's output attribute
        and can never inline the Unevaluable PythonUDF expression.
@@ -278,24 +239,15 @@ def with_blocking_keys(pages: DataFrame, cfg: BlockingConfig | None = None) -> D
     cfg = cfg or BlockingConfig()
     keys = []
     if cfg.use_minhash_bands:
-        # materialize the signature as its own projection FIRST: band_keys
+        # the signature is its own (Generate-pinned) column: band_keys
         # slices it once per band, and HOF lambdas re-evaluate inlined
-        # subexpressions per element (a 16x fold blow-up measured at
-        # bands=16 when the aggregate is inlined).
-        if cfg.minhash_kernel == "arrow":
-            pages = attach_minhash_signature(
-                pages,
-                token_shingles("text", cfg.shingle_size),
-                "__minhash_sig",
-                cfg.num_hashes,
-            )
-        else:
-            pages = pages.withColumn(
-                "__minhash_sig",
-                minhash_signature(
-                    token_shingles("text", cfg.shingle_size), cfg.num_hashes
-                ),
-            )
+        # subexpressions per element
+        pages = attach_minhash_signature(
+            pages,
+            token_shingles("text", cfg.shingle_size),
+            "__minhash_sig",
+            cfg.num_hashes,
+        )
         keys.append(band_keys(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band))
     if cfg.use_host_key:
         keys.insert(0, F.array(F.concat(F.lit("host:"), normalized_host("url"))))

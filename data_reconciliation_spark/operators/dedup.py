@@ -20,16 +20,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from data_reconciliation_spark.config import BlockingConfig
 from data_reconciliation_spark.functions.normalize import normalized_text
+from data_reconciliation_spark.functions.similarity import attach_simhash64_md5
 from data_reconciliation_spark.lifecycle import register_cached
-from data_reconciliation_spark.functions.similarity import simhash64_udf
 from data_reconciliation_spark.operators.blocking import (
-    band_keys,
-    minhash_signature,
+    attach_minhash_signature,
+    band_hashes,
     token_shingles,
+    token_shingles_from,
 )
 
 
@@ -208,7 +208,6 @@ def minhash_lsh_pairs(
     verify_threshold: float | None = 0.7,
     text_col: str = "text",
     id_col: str = "doc_id",
-    latency_regime: bool | None = None,
 ) -> DataFrame:
     """Scale-path near-dup: shingle -> MinHash -> band -> bucket equi-join.
 
@@ -226,21 +225,9 @@ def minhash_lsh_pairs(
 
     The caller releases the internal per-doc cache with
     ``lifecycle.release_cached(result)`` after materializing.
-
-    (``latency_regime`` is accepted for API symmetry with link()/the
-    closure but currently ignored: A/B at bench scale measured the
-    AQE-off cloned-session variant within noise of the default — this
-    operator has ~4 shuffle stages, not the ~30 of the full pipeline,
-    so per-stage AQE re-planning never dominates it.)
     """
     cfg = cfg or BlockingConfig()
     docs = _widen_for_kernel(docs)
-
-    from data_reconciliation_spark.operators.blocking import (
-        attach_minhash_signature,
-        band_hashes,
-        token_shingles_from,
-    )
 
     # ONE tokenization pass: the token array is materialized as its own
     # projection and feeds both the shingle/signature path and the
@@ -258,23 +245,15 @@ def minhash_lsh_pairs(
             ).alias("__th")
         )
     shingles = token_shingles_from(F.col("__toks"), cfg.shingle_size)
-    if cfg.minhash_kernel == "arrow":
-        # Arrow kernel with the double Generate-barrier plan shape (see
-        # blocking.attach_minhash_signature for the rationale); the
-        # extra __th column rides through as a plain attribute (never
-        # crosses into Python — ArrowEvalPython ships UDF inputs only).
-        sig = attach_minhash_signature(
-            base.select(F.col(id_col), *extra, F.col("__toks")),
-            shingles,
-            "__sig",
-            cfg.num_hashes,
-        )
-    else:
-        sig = base.select(
-            F.col(id_col),
-            *extra,
-            minhash_signature(shingles, cfg.num_hashes).alias("__sig"),
-        )
+    # the extra __th column rides through the kernel's plan as a plain
+    # attribute (never crosses into Python — ArrowEvalPython ships UDF
+    # inputs only)
+    sig = attach_minhash_signature(
+        base.select(F.col(id_col), *extra, F.col("__toks")),
+        shingles,
+        "__sig",
+        cfg.num_hashes,
+    )
     from pyspark.storagelevel import StorageLevel
 
     # Single per-doc cache: (id[, token hashes], band hashes).  The band
@@ -373,8 +352,6 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = 1000,
-    use_native: bool = True,
-    arrow_sig: bool = True,
 ) -> DataFrame:
     """SimHash near-dup: 64-bit signature, blocked on 64/n_chunks-bit
     chunks.
@@ -386,12 +363,11 @@ def simhash_pairs(
     candidates); ``max_hamming`` must be < ``n_chunks`` for guaranteed
     recall.
 
-    ``use_native`` (default): signatures via :func:`simhash64_native` —
-    pure Catalyst md5-nibble SimHash, zero Python, and reproducible in
-    DuckDB SQL so the driver oracle verifies the full pair set exactly
-    (recall is guaranteed by pigeonhole, so output == all pairs with
-    hamming <= max_hamming).  ``use_native=False`` keeps the blake2b
-    Arrow-UDF signature for parity with :func:`simhash64_py`.
+    Signatures come from :func:`attach_simhash64_md5` — the md5-nibble
+    SimHash, reproducible in DuckDB SQL so the driver oracle verifies
+    the full pair set exactly (recall is guaranteed by pigeonhole, so
+    output == all pairs with hamming <= max_hamming).  Documents over
+    16383 tokens get a NULL signature and drop out of the chunk join.
 
     ``max_bucket_size`` guards degenerate buckets (e.g. thousands of
     near-empty docs all hashing to signature 0): oversized
@@ -411,31 +387,11 @@ def simhash_pairs(
 
     # persist: the chunk table feeds both self-join sides; the per-doc
     # SimHash signature must be computed exactly once per document
-    if use_native and arrow_sig:
-        # same md5-nibble VALUE as simhash64_native (oracle unchanged),
-        # computed by the vectorized Arrow kernel — differential-tested
-        # bit-exact; arrow_sig=False keeps the zero-Python Catalyst fold
-        from data_reconciliation_spark.functions.similarity import (
-            attach_simhash64_md5,
-        )
-
-        sig = attach_simhash64_md5(
-            docs.select(F.col(id_col), normalized_text(F.col(text_col)).alias("__nt")),
-            F.col("__nt"),
-            "simhash",
-        ).select(F.col(id_col), F.col("simhash")).persist(StorageLevel.MEMORY_AND_DISK)
-    elif use_native:
-        from data_reconciliation_spark.functions.similarity import simhash64_native
-
-        sig = docs.select(
-            F.col(id_col),
-            simhash64_native(normalized_text(F.col(text_col))).alias("simhash"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        sig = docs.select(
-            F.col(id_col),
-            simhash64_udf(normalized_text(F.col(text_col))).alias("simhash"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    sig = attach_simhash64_md5(
+        docs.select(F.col(id_col), normalized_text(F.col(text_col)).alias("__nt")),
+        "__nt",
+        "simhash",
+    ).select(F.col(id_col), F.col("simhash")).persist(StorageLevel.MEMORY_AND_DISK)
     chunks = sig.select(
         id_col,
         "simhash",
@@ -506,23 +462,6 @@ def simhash_pairs(
         cand = cand.unionByName(star.where(F.col("__h") <= max_hamming))
     out = cand.groupBy("id_a", "id_b").agg(F.first("__h").alias("hamming"))
     return register_cached(out, sig)
-
-
-def dedup_rank(
-    docs: DataFrame,
-    key: Column | str,
-    order_col: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Generic keep-first dedup: rank within key, keep rank 1 (the
-    engine's version of the reference's A9 idempotent-append gate)."""
-    key = F.col(key) if isinstance(key, str) else key
-    w = Window.partitionBy(key).orderBy(F.col(order_col), F.col(id_col))
-    return (
-        docs.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def embedding_cosine_pairs(

@@ -328,15 +328,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return media.where(F.col("kind") == "video").mapInPandas(run, out_schema)
 
 
-def size_bucketed(media: DataFrame, n_buckets: int = 32) -> DataFrame:
-    """Repartition by payload-size bucket so decode cost is balanced
-    across tasks (one giant video otherwise stalls its partition)."""
-    bucket = F.pmod(
-        F.xxhash64("media_id") + F.floor(F.log2(F.length("payload") + 2)), F.lit(n_buckets)
-    )
-    return media.repartition(n_buckets, bucket)
-
-
 def resize_images(
     media: DataFrame, width: int = 224, height: int = 224
 ) -> DataFrame:

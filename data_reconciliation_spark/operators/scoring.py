@@ -8,8 +8,9 @@ equi-join (``compare.py:352-375``); the engine generalizes it into a
 three-tier cascade chosen by measured cost per pair:
 
 1. **per-page precompute** (once per page, not per pair): canonical URL,
-   title, hashed distinct-token set, 64-bit SimHash (the one per-page
-   pandas UDF — ~260us/text, which is why it must never run per pair).
+   title, hashed distinct-token set, 64-bit md5-nibble SimHash (the one
+   per-page Arrow UDF, ``attach_simhash64_md5`` — shared with
+   ``dedup.simhash_pairs``).
 2. **native pair features** (JVM, whole-stage codegen, every candidate
    pair): token-set Jaccard via one ``array_intersect`` over
    precomputed 4-byte token hashes — the low word of xxhash64
@@ -50,8 +51,8 @@ from data_reconciliation_spark.functions.normalize import (
     normalized_text,
 )
 from data_reconciliation_spark.functions.similarity import (
+    attach_simhash64_md5,
     jaro_winkler_batch,
-    simhash64_udf,
 )
 from data_reconciliation_spark.operators import blocking as _blocking
 from data_reconciliation_spark.operators.blocking import candidate_pairs
@@ -82,7 +83,9 @@ def jw_features_udf(
 def prepare_pages(pages: DataFrame) -> DataFrame:
     """Per-page scoring payload: canonical URL, title, normalized text,
     hashed distinct-token set, SimHash.  One map pass; SimHash (the only
-    per-page Python) runs once per page.
+    per-page Python) runs once per page.  A page over 16383 tokens gets
+    a NULL SimHash (the kernel's exact-range guard); scoring then leans
+    on the remaining features.
 
     ``tok_hashes`` (4-byte int hash per distinct token, the low word of
     xxhash64) is precomputed HERE because the pair-level Jaccard
@@ -110,7 +113,7 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
     else:
         title = F.lit(None).cast("string")
     norm = normalized_text("text")
-    return pages.select(
+    prepared = pages.select(
         "url",
         canonical_url("url").alias("canon_url"),
         title.alias("title"),
@@ -126,8 +129,8 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
                 ).cast("int"),
             )
         ).alias("tok_hashes"),
-        simhash64_udf(norm).alias("simhash"),
     )
+    return attach_simhash64_md5(prepared, "norm_text", "simhash")
 
 
 def _native_jaccard(a, b):

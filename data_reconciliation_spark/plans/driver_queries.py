@@ -9,9 +9,9 @@ Conventions:
 * the reconciliation queries derive deterministic old/new snapshots from
   ``orders`` (key-modulo splits + arithmetic perturbations) so both
   engines see identical inputs;
-* genuinely non-SQL-expressible operators (xxhash64 minhash bands,
-  blake2b simhash, the indel-ratio UDF) ship without oracle SQL — the
-  driver records rows-only checks for those.
+* genuinely non-SQL-expressible operators (the indel-ratio UDF, the
+  ER pipeline) ship without oracle SQL — the driver records rows-only
+  checks for those.
 """
 
 from __future__ import annotations
@@ -838,7 +838,7 @@ FROM nodes
 #    filter then keeps exactly the token-set-equal pairs, which DuckDB
 #    recomputes directly.  (Probabilistic-recall thresholds are covered
 #    by pytest with a brute-force Jaccard oracle.)
-#  * simhash: native md5-nibble signature (simhash64_native) + pigeonhole
+#  * simhash: md5-nibble signature (attach_simhash64_md5) + pigeonhole
 #    recall (max_hamming < n_chunks) — output == ALL pairs with hamming
 #    <= max_hamming, and DuckDB reproduces the signature bit-for-bit from
 #    md5() + integer arithmetic.
@@ -889,8 +889,8 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(docs, max_hamming=6, n_chunks=8, max_bucket_size=None)
 
 
-# brute-force oracle: md5-nibble SimHash per doc (identical arithmetic to
-# simhash64_native), then every pair with bit_count(xor) <= 6 — valid
+# brute-force oracle: md5-nibble SimHash per doc (bit-identical to
+# attach_simhash64_md5), then every pair with bit_count(xor) <= 6 — valid
 # because 8 chunks guarantee recall for any hamming <= 7 by pigeonhole.
 SQL_SIMHASH = r"""
 WITH norm AS (
@@ -928,7 +928,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 
 
 # ---------------------------------------------------------------------------
-# Rows-only queries (no SQL oracle: blake2b / indel kernels)
+# Rows-only queries (no SQL oracle: indel kernel, ER pipeline)
 # ---------------------------------------------------------------------------
 
 

@@ -91,7 +91,7 @@ def test_minhash_lsh_pairs(docs):
 
 
 def test_simhash_pairs(docs):
-    # Native md5-nibble SimHash: 8 chunks guarantee recall for any
+    # md5-nibble SimHash: 8 chunks guarantee recall for any
     # distance <= 7 by pigeonhole, so the output must equal the
     # brute-force pair set computed from the pure-Python oracle.
     from data_reconciliation_spark.functions.similarity import (
@@ -121,17 +121,33 @@ def test_simhash_pairs(docs):
     assert got.get((0, 1)) == 0 and (0, 3) not in got
 
 
-def test_simhash_pairs_blake2b_variant(docs):
-    # the Arrow-UDF blake2b signature path (parity with simhash64_py)
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_pairs(
-            docs, max_hamming=6, n_chunks=8, use_native=False
-        ).collect()
-    }
-    assert got.get((0, 1)) == 0
-    assert got.get((0, 2)) == 5
-    assert (0, 3) not in got
+@pytest.mark.parametrize(
+    "query, oracle, rows",
+    [("q_simhash_pairs", "SQL_SIMHASH", 71), ("q_minhash_lsh_pairs", "SQL_MINHASH", 377)],
+)
+def test_dedup_kernels_match_duckdb_oracle(spark, query, oracle, rows):
+    """The simhash and minhash driver queries at sf0.001 equal their
+    frozen DuckDB SQL, compared the way ``tools/check_oracles.py``
+    compares them (row count, column names, order-insensitive value
+    hash).  DuckDB recomputes every signature from ``md5()`` or token
+    sets, so this checks the Arrow kernels against an engine that
+    shares no code with them."""
+    import duckdb
+
+    from data_reconciliation_spark.lifecycle import release_cached
+    from data_reconciliation_spark.plans import driver_queries as dq
+    from tools.check_oracles import value_hash
+
+    sf = "/root/testdata/sf0.001"
+    got_df = getattr(dq, query)(spark, sf)
+    got = got_df.toPandas()
+    release_cached(got_df)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    want = con.execute(getattr(dq, oracle)).df()
+    assert len(got) == len(want) == rows
+    assert sorted(got.columns) == sorted(want.columns)
+    assert value_hash(got) == value_hash(want)
 
 
 def test_lsh_hot_bucket_guards(spark):

@@ -470,3 +470,35 @@ def test_local_union_find_nonmonotone_rank_chain(spark):
     assert sorted((r["node"], r["component"]) for r in out) == sorted(
         (r["node"], r["component"]) for r in dist
     )
+
+
+def test_link_page_over_simhash_token_guard(spark):
+    """A page over 16383 tokens gets a NULL SimHash (the md5 kernel's
+    exact-range guard).  It must still get exactly one label, and still
+    link to its exact duplicate on token Jaccard alone: the titles
+    differ, and the NULL Hamming distance is no evidence either way."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(3000)]
+    big = " ".join(rng.choice(vocab) for _ in range(17000))
+    pages = spark.createDataFrame(
+        [
+            ("https://alpha.example.com/report", big, "Annual figures"),
+            ("https://beta.example.com/report", big, "Zebra crossing"),
+            ("https://gamma.example.com/other", "a short unrelated page", "Other"),
+        ],
+        "url string, text string, title string",
+    )
+    res = link(pages)
+    labels = {r["url"]: r["entity"] for r in res.clusters.collect()}
+    assert len(labels) == 3 and res.clusters.count() == 3
+    a, b, c = sorted(labels)
+    assert labels[a] == labels[b] != labels[c]
+    pair = res.scored_pairs.where(
+        (F.col("url_a") == a) & (F.col("url_b") == b)
+    ).collect()
+    assert len(pair) == 1
+    assert pair[0]["simhash_hamming"] is None
+    assert pair[0]["token_jaccard"] == 1.0 and pair[0]["is_match"]
+    res.release()

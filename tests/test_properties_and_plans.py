@@ -14,7 +14,7 @@ from data_reconciliation_spark.functions.similarity import (
     hamming64_py,
     indel_ratio_py,
     jaro_winkler_py,
-    simhash64_py,
+    simhash64_md5_py,
     token_jaccard_py,
 )
 
@@ -60,7 +60,11 @@ def test_jaro_winkler_properties(a, b):
 def test_jaccard_and_simhash_consistency(a, b):
     j = token_jaccard_py(a, b)
     assert 0.0 <= j <= 1.0
-    h = hamming64_py(simhash64_py(a), simhash64_py(b))
+    # hash the whitespace-normalized text, as normalized_text feeds the
+    # engine's SimHash (the md5 kernel keeps empty tokens of raw text)
+    h = hamming64_py(
+        simhash64_md5_py(" ".join(a.split())), simhash64_md5_py(" ".join(b.split()))
+    )
     assert 0 <= h <= 64
     if a.split() == b.split():
         assert h == 0 and j == 1.0
@@ -274,9 +278,9 @@ def test_minhash_arrow_kernel_extraction_and_semantics(spark):
     double Generate barrier in ``attach_minhash_signature``, the
     extraction rule left the raw PythonUDF in an interpreted projection
     over cached inputs (INTERNAL_ERROR 'Cannot evaluate expression' at
-    the exchange) — and (b) agree with the native fold on the minhash
-    CONTRACT: equal shingle sets => equal signatures, disjoint sets =>
-    (near-certainly) different ones, null text => null signature,
+    the exchange) — and (b) keep the minhash CONTRACT: equal shingle
+    sets => equal signatures, disjoint sets => (near-certainly)
+    different ones, null text => a deterministic non-null signature,
     stable across repartitioning."""
     from pyspark.sql import functions as F
 
@@ -304,8 +308,7 @@ def test_minhash_arrow_kernel_extraction_and_semantics(spark):
         assert sigs[0] == sigs[1] == sigs[2]
         assert sigs[0] != sigs[3]
         # null text degenerates to a single null shingle (hash of null =
-        # seed) — same semantics as the native fold: a deterministic
-        # signature distinct from real content
+        # seed): a deterministic signature distinct from real content
         assert sigs[4] is not None and sigs[4] != sigs[0]
         sigs2 = {
             r["doc_id"]: r["sig"]
@@ -329,24 +332,17 @@ def test_minhash_arrow_kernel_extraction_and_semantics(spark):
 
 
 def test_simhash_arrow_kernel_bit_exact(spark):
-    """``attach_simhash64_md5`` must be BIT-EXACT to both
-    ``simhash64_native`` (Catalyst fold) and the pure-python oracle on
-    random corpora incl. empty/null/single-token texts and the 16383-
-    token guard — that exactness is what keeps the DuckDB simhash
-    oracle valid for the Arrow kernel.  Also guards the two silent-
-    float-corruption modes found building it: a null list slot
-    degrading the Arrow input buffer to float64 (prevented by native
-    coalesce-to-empty), and a None-bearing output Series coercing to
-    float64 (prevented by dtype=object)."""
+    """``attach_simhash64_md5`` must be BIT-EXACT to the pure-python
+    oracle ``simhash64_md5_py`` on random corpora incl. empty/null/
+    single-token texts and the 16383-token guard — that exactness is
+    what keeps the DuckDB simhash oracle valid for the Arrow kernel.
+    Also guards the two silent-float-corruption modes found building
+    it: a null list slot degrading the Arrow input buffer to float64
+    (prevented by native coalesce-to-empty), and a None-bearing output
+    Series coercing to float64 (prevented by dtype=object)."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from data_reconciliation_spark.functions.similarity import (
-        attach_simhash64_md5,
-        simhash64_md5_py,
-        simhash64_native,
-    )
+    from data_reconciliation_spark.functions.similarity import attach_simhash64_md5
 
     rng = random.Random(1234)
     vocab = [f"tok{i}" for i in range(150)]
@@ -357,12 +353,15 @@ def test_simhash_arrow_kernel_bit_exact(spark):
     rows += [(900, ""), (901, None), (902, "one"), (903, "a a b b")]
     df = spark.createDataFrame(rows, "id long, text string")
     got = {r["id"]: r["sig"] for r in attach_simhash64_md5(df, "text", "sig").collect()}
-    nat = {
-        r["id"]: r["sig"]
-        for r in df.select("id", simhash64_native(F.col("text")).alias("sig")).collect()
-    }
     for i, t in rows:
-        assert got[i] == nat[i] == simhash64_md5_py(t), (i, got[i], nat[i])
+        assert got[i] == simhash64_md5_py(t), (i, got[i])
 
-    big = spark.createDataFrame([(0, " ".join(["x"] * 16384))], "id long, text string")
-    assert attach_simhash64_md5(big, "text", "sig").collect()[0]["sig"] is None
+    # exactly at the guard: a signature; one token past it: NULL
+    edge = spark.createDataFrame(
+        [(0, " ".join(["x"] * 16383)), (1, " ".join(["x"] * 16384))],
+        "id long, text string",
+    )
+    got = {r["id"]: r["sig"] for r in attach_simhash64_md5(edge, "text", "sig").collect()}
+    assert got[0] is not None
+    assert got[0] == simhash64_md5_py(" ".join(["x"] * 16383))
+    assert got[1] is None
