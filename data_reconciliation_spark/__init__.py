@@ -17,6 +17,15 @@ tolerance, match-percentage formula).
 
 __version__ = "0.1.0"
 
+from pyspark.core.files import SparkFiles as _SparkFiles
+
+# On a Python worker, never on the driver: read each zip archive on the
+# worker's path once per worker, not once per task (see worker.py).
+if _SparkFiles._is_running_on_worker:
+    from data_reconciliation_spark import worker as _worker
+
+    _worker.install()
+
 from data_reconciliation_spark.config import (  # noqa: F401
     BlockingConfig,
     FieldRule,

@@ -35,7 +35,6 @@ __all__ = [
     "token_jaccard_py",
     "hamming64_py",
     "indel_ratio_udf",
-    "jaro_winkler_udf",
     "simhash64_md5_py",
     "attach_simhash64_md5",
 ]
@@ -402,11 +401,6 @@ def indel_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(indel_ratio_batch(list(a), list(b)), index=a.index)
 
 
-@pandas_udf(T.DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(jaro_winkler_batch(list(a), list(b)), index=a.index)
-
-
 # ---------------------------------------------------------------------------
 # md5-nibble SimHash — exactly reproducible in ANSI SQL (DuckDB), so the
 # driver's oracle can verify it.
@@ -440,8 +434,7 @@ def simhash64_md5_py(s: str | None) -> int | None:
     return out
 
 
-@pandas_udf(T.LongType())
-def simhash64_md5_batch_udf(hashes: pd.Series) -> pd.Series:
+def _simhash64_md5_batch(hashes: pd.Series) -> pd.Series:
     """Vectorized md5-nibble SimHash vote: input = per-document array of
     64-bit token hashes (first 16 md5 hex nibbles, computed natively);
     output BIT-EXACT to :func:`simhash64_md5_py` (differential-tested).
@@ -490,6 +483,11 @@ def simhash64_md5_batch_udf(hashes: pd.Series) -> pd.Series:
     # dtype=object is load-bearing: a plain Series of ints-with-None
     # coerces to float64 and silently destroys integer bits beyond 2^53
     return pd.Series(out, index=hashes.index, dtype=object)
+
+
+# Not a decorator: the function stays reachable by name, so a worker
+# unpickles it by reference and imports the package (see ``worker.py``).
+simhash64_md5_batch_udf = pandas_udf(_simhash64_md5_batch, T.LongType())
 
 
 def attach_simhash64_md5(df, text, out_col: str):

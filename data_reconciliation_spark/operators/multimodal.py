@@ -20,6 +20,7 @@ thumbnails.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import numpy as np
@@ -300,6 +301,21 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
+def _sample_frame_batches(
+    batches: Iterator[pd.DataFrame], *, every_ms: int
+) -> Iterator[pd.DataFrame]:
+    """The ``mapInPandas`` function of :func:`sample_frames`."""
+    for pdf in batches:
+        rows = []
+        for _, r in pdf.iterrows():
+            dur = int(r["duration_ms"] or 0)
+            for idx, ts in enumerate(range(0, max(dur, 1), every_ms)):
+                rows.append((r["media_id"], idx, ts, r["payload"]))
+        yield pd.DataFrame(
+            rows, columns=["media_id", "frame_idx", "frame_ts_ms", "payload"]
+        )
+
+
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame-sampling contract for video rows: one output row per sampled
     frame (1 + duration//every_ms rows).  The frame *decode* is stubbed —
@@ -314,18 +330,9 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                dur = int(r["duration_ms"] or 0)
-                for idx, ts in enumerate(range(0, max(dur, 1), every_ms)):
-                    rows.append((r["media_id"], idx, ts, r["payload"]))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_ts_ms", "payload"]
-            )
-
-    return media.where(F.col("kind") == "video").mapInPandas(run, out_schema)
+    return media.where(F.col("kind") == "video").mapInPandas(
+        functools.partial(_sample_frame_batches, every_ms=every_ms), out_schema
+    )
 
 
 def resize_images(

@@ -221,8 +221,9 @@ def reconcile(
     sort-merge join's two exchanges + join (measured at sf0.1
     local[32]: 0.97-1.27 s -> 0.62-0.70 s warm, 3.7 -> 1.2 s first
     invocation — A/B recorded in OPTIMIZATION_r07.md
-    "a1_match_metrics"; the simpler plan also compiles less codegen).  Under duplicate keys the two plans genuinely differ
-    (merge multiplies rows, the aggregation collapses them), hence the
+    "a1_match_metrics"; the simpler plan also compiles less codegen).
+    Under duplicate keys the two plans genuinely differ (merge
+    multiplies rows, the aggregation collapses them), hence the
     explicit opt-in rather than an auto-detect.
     """
     cfg = cfg if isinstance(cfg, ReconConfig) else ReconConfig.from_dict(cfg)

@@ -16,9 +16,46 @@ window (range join).  Both are shuffle-aware:
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _asof_merge(
+    lpdf: pd.DataFrame,
+    rpdf: pd.DataFrame,
+    *,
+    ts_col: str,
+    by: list[str],
+    right_payload: list[str],
+    direction: str,
+    suffix: str,
+    out_cols: list[str],
+) -> pd.DataFrame:
+    """One key's cogrouped ``pd.merge_asof`` for :func:`asof_join`."""
+    # cogroup hands a COLUMN-LESS empty frame when one side has no
+    # rows for the key — guard both sides.
+    if len(lpdf) == 0:
+        return pd.DataFrame(columns=out_cols)
+    if len(rpdf) == 0:
+        out = lpdf.copy()
+        for c in [f"{ts_col}{suffix}"] + [f"{c}{suffix}" for c in right_payload]:
+            out[c] = None
+        return out[out_cols]
+    lpdf = lpdf.sort_values(ts_col, kind="mergesort")
+    rpdf = rpdf.sort_values(ts_col, kind="mergesort").rename(
+        columns={c: f"{c}{suffix}" for c in [ts_col, *right_payload]}
+    )
+    merged = pd.merge_asof(
+        lpdf,
+        rpdf.drop(columns=by, errors="ignore"),
+        left_on=ts_col,
+        right_on=f"{ts_col}{suffix}",
+        direction=direction,
+    )
+    return merged[out_cols]
 
 
 def asof_join(
@@ -72,33 +109,21 @@ def asof_join(
 
     out_cols = lcols + [f"{ts_col}{suffix}"] + [f"{c}{suffix}" for c in right_payload]
 
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        # cogroup hands a COLUMN-LESS empty frame when one side has no
-        # rows for the key — guard both sides.
-        if len(lpdf) == 0:
-            return pd.DataFrame(columns=out_cols)
-        if len(rpdf) == 0:
-            out = lpdf.copy()
-            for c in [f"{ts_col}{suffix}"] + [f"{c}{suffix}" for c in right_payload]:
-                out[c] = None
-            return out[out_cols]
-        lpdf = lpdf.sort_values(ts_col, kind="mergesort")
-        rpdf = rpdf.sort_values(ts_col, kind="mergesort").rename(
-            columns={c: f"{c}{suffix}" for c in [ts_col, *right_payload]}
-        )
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf.drop(columns=by, errors="ignore"),
-            left_on=ts_col,
-            right_on=f"{ts_col}{suffix}",
-            direction=direction,
-        )
-        return merged[out_cols]
-
     return (
         left.groupBy(*by)
         .cogroup(r.groupBy(*by))
-        .applyInPandas(merge, out_schema)
+        .applyInPandas(
+            functools.partial(
+                _asof_merge,
+                ts_col=ts_col,
+                by=by,
+                right_payload=right_payload,
+                direction=direction,
+                suffix=suffix,
+                out_cols=out_cols,
+            ),
+            out_schema,
+        )
     )
 
 

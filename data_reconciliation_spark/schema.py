@@ -54,18 +54,3 @@ RUNS_SCHEMA = T.StructType(
         T.StructField("primary_key_used", T.StringType(), False),
     ]
 )
-
-# Scored candidate-pair output of the ER pipeline.
-SCORED_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("url_a", T.StringType(), False),
-        T.StructField("url_b", T.StringType(), False),
-        T.StructField("block_key", T.StringType(), False),
-        T.StructField("url_jw", T.DoubleType(), True),
-        T.StructField("title_jw", T.DoubleType(), True),
-        T.StructField("token_jaccard", T.DoubleType(), True),
-        T.StructField("simhash_hamming", T.IntegerType(), True),
-        T.StructField("score", T.DoubleType(), True),
-        T.StructField("is_match", T.BooleanType(), False),
-    ]
-)

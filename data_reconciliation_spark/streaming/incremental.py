@@ -18,8 +18,13 @@ object storage.
 
 from __future__ import annotations
 
+import datetime
+import functools
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from data_reconciliation_spark.config import ReconConfig
 from data_reconciliation_spark.operators.reconcile import _mismatch_expr
@@ -98,6 +103,85 @@ def incremental_exception_stream(
     ).select(*pk_cols, ts_col, "e.field", "e.old", "e.new")
 
 
+def _sessionize_group(
+    key,
+    pdfs,
+    state: GroupState,
+    *,
+    key_col: str,
+    ts_col: str,
+    gap_seconds: int,
+    max_open_sessions_per_key: int,
+):
+    """One key's ``applyInPandasWithState`` step for :func:`sessionize_events`."""
+    wm_ms = state.getCurrentWatermarkMs()
+    intervals: list[list[int]] = []
+    if state.exists:
+        starts, ends, ns = state.get
+        intervals = [[s, e, n] for s, e, n in zip(starts, ends, ns)]
+    if not state.hasTimedOut:
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        ts = sorted(
+            int(t)
+            for t in rows[ts_col].astype("datetime64[us]").astype("int64")
+            // 1_000_000
+        )
+        for t in ts:
+            intervals.append([t, t, 1])
+    # merge: sort by start, gap-join adjacent intervals
+    intervals.sort(key=lambda iv: iv[0])
+    sessions: list[list[int]] = []
+    for iv in intervals:
+        if sessions and iv[0] - sessions[-1][1] <= gap_seconds:
+            sessions[-1][1] = max(sessions[-1][1], iv[1])
+            sessions[-1][2] += iv[2]
+        else:
+            sessions.append(iv)
+    # a session closes exactly when the watermark passes end+gap:
+    # any event that could still extend it would have ts <= end+gap
+    # <= watermark and be dropped as late — so this is the earliest
+    # SAFE close, and it reproduces batch semantics on non-late data
+    closed = [s for s in sessions if (s[1] + gap_seconds) * 1000 <= wm_ms]
+    open_ = [s for s in sessions if (s[1] + gap_seconds) * 1000 > wm_ms]
+    evicted: list[list[int]] = []
+    if len(open_) > max_open_sessions_per_key:
+        # state cap: force-close the oldest open sessions (by end
+        # time — they are furthest from being extended) and flag
+        # them; the newest max_open_sessions_per_key stay tracked
+        open_.sort(key=lambda s: s[1])
+        n_evict = len(open_) - max_open_sessions_per_key
+        evicted = open_[:n_evict]
+        open_ = open_[n_evict:]
+    if open_:
+        state.update(
+            (
+                [s[0] for s in open_],
+                [s[1] for s in open_],
+                [s[2] for s in open_],
+            )
+        )
+        # next wake-up: the earliest possible close among open
+        # sessions (> watermark by construction, so always valid)
+        state.setTimeoutTimestamp(
+            min((s[1] + gap_seconds) for s in open_) * 1000
+        )
+    elif state.exists:
+        state.remove()
+    out_rows = [(s, e, n, False) for s, e, n in closed] + [
+        (s, e, n, True) for s, e, n in evicted
+    ]
+    for s, e, n, ev in out_rows:
+        yield pd.DataFrame(
+            {
+                key_col: [key[0]],
+                "session_start": [datetime.datetime.utcfromtimestamp(s)],
+                "session_end": [datetime.datetime.utcfromtimestamp(e)],
+                "n_events": [n],
+                "evicted": [ev],
+            }
+        )
+
+
 def sessionize_events(
     events: DataFrame,
     key_col: str = "user_id",
@@ -129,11 +213,6 @@ def sessionize_events(
     per-event counts are conserved, exactly like watermark-late drops
     the semantics already accept).
     """
-    import datetime as _dt
-
-    import pandas as _pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = (
         f"{key_col} long, session_start timestamp, session_end timestamp, "
         "n_events long, evicted boolean"
@@ -148,79 +227,17 @@ def sessionize_events(
     # differential fuzz test, round-2 verdict #10).
     state_schema = "starts array<long>, ends array<long>, ns array<long>"
 
-    def fn(key, pdfs, state: GroupState):
-        wm_ms = state.getCurrentWatermarkMs()
-        intervals: list[list[int]] = []
-        if state.exists:
-            starts, ends, ns = state.get
-            intervals = [[s, e, n] for s, e, n in zip(starts, ends, ns)]
-        if not state.hasTimedOut:
-            rows = _pd.concat(list(pdfs), ignore_index=True)
-            ts = sorted(
-                int(t)
-                for t in rows[ts_col].astype("datetime64[us]").astype("int64")
-                // 1_000_000
-            )
-            for t in ts:
-                intervals.append([t, t, 1])
-        # merge: sort by start, gap-join adjacent intervals
-        intervals.sort(key=lambda iv: iv[0])
-        sessions: list[list[int]] = []
-        for iv in intervals:
-            if sessions and iv[0] - sessions[-1][1] <= gap_seconds:
-                sessions[-1][1] = max(sessions[-1][1], iv[1])
-                sessions[-1][2] += iv[2]
-            else:
-                sessions.append(iv)
-        # a session closes exactly when the watermark passes end+gap:
-        # any event that could still extend it would have ts <= end+gap
-        # <= watermark and be dropped as late — so this is the earliest
-        # SAFE close, and it reproduces batch semantics on non-late data
-        closed = [s for s in sessions if (s[1] + gap_seconds) * 1000 <= wm_ms]
-        open_ = [s for s in sessions if (s[1] + gap_seconds) * 1000 > wm_ms]
-        evicted: list[list[int]] = []
-        if len(open_) > max_open_sessions_per_key:
-            # state cap: force-close the oldest open sessions (by end
-            # time — they are furthest from being extended) and flag
-            # them; the newest max_open_sessions_per_key stay tracked
-            open_.sort(key=lambda s: s[1])
-            n_evict = len(open_) - max_open_sessions_per_key
-            evicted = open_[:n_evict]
-            open_ = open_[n_evict:]
-        if open_:
-            state.update(
-                (
-                    [s[0] for s in open_],
-                    [s[1] for s in open_],
-                    [s[2] for s in open_],
-                )
-            )
-            # next wake-up: the earliest possible close among open
-            # sessions (> watermark by construction, so always valid)
-            state.setTimeoutTimestamp(
-                min((s[1] + gap_seconds) for s in open_) * 1000
-            )
-        elif state.exists:
-            state.remove()
-        out_rows = [(s, e, n, False) for s, e, n in closed] + [
-            (s, e, n, True) for s, e, n in evicted
-        ]
-        for s, e, n, ev in out_rows:
-            yield _pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "session_start": [_dt.datetime.utcfromtimestamp(s)],
-                    "session_end": [_dt.datetime.utcfromtimestamp(e)],
-                    "n_events": [n],
-                    "evicted": [ev],
-                }
-            )
-
     sessions = (
         events.withWatermark(ts_col, watermark)
         .groupBy(key_col)
         .applyInPandasWithState(
-            fn,
+            functools.partial(
+                _sessionize_group,
+                key_col=key_col,
+                ts_col=ts_col,
+                gap_seconds=gap_seconds,
+                max_open_sessions_per_key=max_open_sessions_per_key,
+            ),
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="append",

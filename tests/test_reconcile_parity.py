@@ -283,3 +283,38 @@ def test_metrics_only_unique_pk_matches_join_path(snapshots):
         join_based.field_exception_count,
         join_based.per_field_exceptions,
     )
+
+
+def _metrics(res):
+    return (
+        res.match_pct,
+        res.n_both,
+        res.n_old_only,
+        res.n_new_only,
+        res.field_exception_count,
+        res.per_field_exceptions,
+    )
+
+
+@pytest.mark.parametrize(
+    "fields",
+    [
+        {**FIELD_CFG, "age": {"type": "ignore"}},
+        {c: {"type": "ignore"} for c in FIELD_CFG},
+    ],
+    ids=["one_ignored", "all_ignored"],
+)
+def test_metrics_only_unique_pk_ignored_columns(snapshots, fields):
+    """The union-aggregate plan carries only the non-ignored compare
+    columns; with none left it falls back to the join path.  Either way
+    its scalars equal the join-based metrics_only path's."""
+    df_old, df_new = snapshots
+    cfg = {"ignore_nulls": False, "include_missing_records": True, "fields": fields}
+    old, new = df_old.where("id != 6"), df_new.where("id != 5")
+    join_based = reconcile(old, new, ["id"], cfg, metrics_only=True)
+    union_agg = reconcile(old, new, ["id"], cfg, metrics_only=True, unique_pk=True)
+    assert _metrics(union_agg) == _metrics(join_based)
+    assert "age" not in union_agg.per_field_exceptions
+    if all(r["type"] == "ignore" for r in fields.values()):
+        assert union_agg.match_pct == 100.0
+        assert union_agg.field_exception_count == 0
