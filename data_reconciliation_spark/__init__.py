@@ -10,7 +10,8 @@ three-stage DataFrame flow:
 2. pair scoring (Arrow-vectorized pandas UDFs; no per-row Python)
 3. transitive clustering (large-star/small-star label propagation)
 
-plus a ``reconcile()`` API that reproduces the reference's snapshot
+plus a ``reconcile()`` API (with ``reconcile_metrics()`` and
+``reconcile_exceptions()`` for callers of one output) that reproduces the reference's snapshot
 comparison semantics exactly (null rules, fuzzy thresholds, numeric
 tolerance, match-percentage formula).
 """
@@ -33,6 +34,9 @@ from data_reconciliation_spark.config import (  # noqa: F401
     ScoringConfig,
 )
 from data_reconciliation_spark.operators.reconcile import (  # noqa: F401
+    ReconcileMetrics,
     ReconcileResult,
     reconcile,
+    reconcile_exceptions,
+    reconcile_metrics,
 )

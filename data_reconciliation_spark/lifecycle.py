@@ -20,9 +20,10 @@ releasing prevents cached blocks accumulating until eviction pressure
 creates the storage-vs-execution memory contention measured in
 BENCH/scaling.json (round-3 verdict #1).
 
-This is the generalization of the per-type contracts that already
-existed: ``ReconcileResult.release()`` (operators/reconcile.py) and
-``release_index_source`` (sources/state.py).
+Two operators keep a per-type form of the same contract:
+``ReconcileResult.release()`` (operators/reconcile.py; its
+``reconcile_metrics`` and ``reconcile_exceptions`` siblings cache
+nothing) and ``release_index_source`` (sources/state.py).
 """
 
 from __future__ import annotations

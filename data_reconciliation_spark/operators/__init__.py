@@ -4,5 +4,8 @@ profiling."""
 
 from data_reconciliation_spark.operators.reconcile import (  # noqa: F401
     reconcile,
+    reconcile_exceptions,
+    reconcile_metrics,
+    ReconcileMetrics,
     ReconcileResult,
 )

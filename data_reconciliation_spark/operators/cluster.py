@@ -203,12 +203,6 @@ def _local_union_find(e: DataFrame) -> DataFrame:
     )
 
 
-# Diagnostic hook: when set, called with the normalized entry edge set
-# (post optional distinct) — tools/dump_plans.py uses it to snapshot the
-# executed entry plan.  None in production; a single None-check per call.
-_entry_plan_probe = None
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -266,8 +260,6 @@ def connected_components(
     )
     if not assume_distinct:
         e = e.distinct()
-    if _entry_plan_probe is not None:
-        _entry_plan_probe(e)
 
     from pyspark.sql.types import NumericType
 

@@ -17,6 +17,24 @@ plan instead of a pandas merge plus per-row Python loops:
   100.0 when the denominator is 0; missing-record exceptions count toward
   ``num_exceptions`` but never toward the formula.
 
+Three entry points share one flagged join, one metrics aggregation and
+one exception melt, and differ only in which outputs they build:
+
+``reconcile()`` returns a ``ReconcileResult``: the metrics and the lazy
+``exceptions`` stream, both read from one persisted flagged join, so the
+snapshot join runs once for both.  The caller frees the cache with
+``release()`` once ``exceptions`` has been consumed.
+
+``reconcile_metrics()`` returns the scalars only (``ReconcileMetrics``):
+join, mismatch flags and aggregation fuse into one pass; nothing is
+cached.
+
+``reconcile_exceptions()`` returns the exception DataFrame only; the
+join runs once, when it is consumed, and nothing is cached.
+
+All three use the join's row-multiplying duplicate-key semantics, the
+same as the reference pandas merge.
+
 Scale notes: the join is a plain equi-join, so Catalyst picks
 broadcast-hash when one snapshot is small and sort-merge (AQE
 skew-splittable) otherwise; all predicates except the fuzzy kernel are
@@ -32,6 +50,7 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from data_reconciliation_spark.config import FieldRule, ReconConfig
 from data_reconciliation_spark.functions.similarity import indel_ratio_udf
@@ -133,27 +152,29 @@ def _mismatch_expr(
     )
 
 
-@dataclass
-class ReconcileResult:
-    """Typed analog of the reference result dict (compare.py:315-318)."""
+@dataclass(frozen=True)
+class ReconcileMetrics:
+    """The scalar metrics of a reconciliation (A1/A2, compare.py:298-308)."""
 
     match_pct: float
+    n_both: int
+    n_old_only: int
+    n_new_only: int
+    field_exception_count: int
+    per_field_exceptions: dict[str, int]
+
+
+@dataclass(frozen=True)
+class ReconcileResult(ReconcileMetrics):
+    """Typed analog of the reference result dict (compare.py:315-318)."""
+
     exceptions: DataFrame          # long format: pk..., field, old, new, change_type
-    n_both: int = 0
-    n_old_only: int = 0
-    n_new_only: int = 0
-    field_exception_count: int = 0
-    per_field_exceptions: dict[str, int] = dc_field(default_factory=dict)
-    # cached flagged-join handle; release() when done with `exceptions`
-    _persisted: DataFrame | None = None
+    _cached: DataFrame = dc_field(repr=False)  # the persisted flagged join
 
     def release(self) -> None:
-        """Unpersist the cached flagged join backing ``exceptions``.
-        Call once the exceptions DataFrame has been written/collected;
-        ``exceptions`` stays usable afterwards (it recomputes)."""
-        if self._persisted is not None:
-            self._persisted.unpersist()
-            self._persisted = None
+        """Unpersist the cached flagged join backing ``exceptions``; call
+        once it has been consumed (it stays usable and recomputes)."""
+        self._cached.unpersist()
 
     def to_result(self) -> dict:
         """Reference-shaped ``{match_pct, exceptions}`` (collects — use on
@@ -165,67 +186,24 @@ class ReconcileResult:
         return {"match_pct": self.match_pct, "exceptions": pk_and_rest}
 
 
-# Diagnostic hook: when set, called with the metrics aggregation
-# DataFrame immediately before it is collected (tools/dump_plans.py uses
-# it to snapshot the executed plan).  None in production — a single
-# ``is not None`` check per reconcile() call, no data-path cost.
-_metrics_plan_probe = None
+def _presence() -> tuple[Column, Column, Column]:
+    """``(in_both, old_only, new_only)`` over the flagged join."""
+    return (
+        F.col(_PRESENT_OLD).isNotNull() & F.col(_PRESENT_NEW).isNotNull(),
+        F.col(_PRESENT_OLD).isNotNull() & F.col(_PRESENT_NEW).isNull(),
+        F.col(_PRESENT_OLD).isNull() & F.col(_PRESENT_NEW).isNotNull(),
+    )
 
 
-def reconcile(
+def _flagged_join(
     df_old: DataFrame,
     df_new: DataFrame,
     pk_cols: list[str],
-    cfg: ReconConfig | dict | None = None,
-    eager_metrics: bool = True,
-    metrics_only: bool = False,
-    unique_pk: bool = False,
-) -> ReconcileResult:
-    """Compare two snapshots on ``pk_cols`` under ``cfg`` rules.
-
-    Pure DataFrame -> DataFrame; mirrors the library contract of the
-    reference ``run_compare(df_old, df_new, pk_cols, cfg)``
-    (``test_comparison_logic.py:13``).
-
-    ``eager_metrics=False`` skips the metrics aggregation AND the
-    flagged-join persist: the result carries only the lazy
-    ``exceptions`` DataFrame (metrics fields are NaN/0), which executes
-    the snapshot join exactly once when consumed, and there is no cache
-    to release.  Use it when only the exception stream is needed (e.g.
-    a long-running driver emitting exceptions per run — the eager
-    path's cache would otherwise leak until ``release()``).
-
-    ``metrics_only=True`` (with eager metrics) is the symmetric fast
-    path for consumers of the SCALARS only (A1/A2 dashboards): the
-    flagged join is NOT persisted — join, per-field flags, and the
-    metrics aggregation fuse into one whole-stage-codegen pass with
-    map-side partial aggregation, never materializing the wide row
-    stream (a1_match_metrics rode this path from round 6 on: headline
-    4.17s/kernel 1.76s in BENCH_r04.json with the persist-based path
-    vs 3.31s/1.92s = 1.72x in the round-7 snapshot — see
-    OPTIMIZATION_r07.md; BENCH/headline.json is machine-refreshed each
-    bench run, so current numbers live there, not here — the persist's
-    cache write dominated the old path's first invocation).
-    ``exceptions`` remains usable but RECOMPUTES the join if consumed —
-    callers that want both the metrics and the exception stream should
-    keep the default, whose single cached join feeds both.
-
-    ``unique_pk=True`` asserts that ``pk_cols`` uniquely identify a row
-    in BOTH snapshots (the normal reconciliation contract; the reference
-    pandas merge would row-multiply on duplicates exactly like the
-    join).  With ``metrics_only`` it enables the union-aggregate metrics
-    plan: both sides are tagged and unioned, merged per key by one
-    aggregation (a SortAggregate — struct/string Max buffers are not
-    hash-mutable), and reduced to the scalars — ONE wide exchange, no
-    join step, and only active columns shuffled, versus the full-outer
-    sort-merge join's two exchanges + join (measured at sf0.1
-    local[32]: 0.97-1.27 s -> 0.62-0.70 s warm, 3.7 -> 1.2 s first
-    invocation — A/B recorded in OPTIMIZATION_r07.md
-    "a1_match_metrics"; the simpler plan also compiles less codegen).
-    Under duplicate keys the two plans genuinely differ (merge
-    multiplies rows, the aggregation collapses them), hence the
-    explicit opt-in rather than an auto-detect.
-    """
+    cfg: ReconConfig | dict | None,
+) -> tuple[DataFrame, dict[str, str], ReconConfig]:
+    """J1 + F1-F5: the full-outer join of both snapshots with presence
+    flags and one boolean mismatch column per active (non-ignored)
+    compare field.  Returns ``(flagged, {field: flag column}, cfg)``."""
     cfg = cfg if isinstance(cfg, ReconConfig) else ReconConfig.from_dict(cfg)
     compare_cols = [c for c in df_old.columns if c not in pk_cols]
     missing = [c for c in compare_cols if c not in df_new.columns]
@@ -235,9 +213,9 @@ def reconcile(
     old_types = dict(zip(df_old.columns, [f.dataType for f in df_old.schema.fields]))
     new_types = dict(zip(df_new.columns, [f.dataType for f in df_new.schema.fields]))
 
-    # J1: full-outer equi-join with presence flags instead of pandas
-    # ``indicator=True``.  Joining on the pk column list (not an expr)
-    # coalesces the key columns — same shape as the pandas merge.
+    # Presence flags instead of pandas ``indicator=True``.  Joining on
+    # the pk column list (not an expr) coalesces the key columns — same
+    # shape as the pandas merge.
     lhs = df_old.select(
         *pk_cols,
         *[F.col(c).alias(c + _OLD) for c in compare_cols],
@@ -251,157 +229,66 @@ def reconcile(
     merged = lhs.join(rhs, on=pk_cols, how="full_outer")
 
     active_cols = [c for c in compare_cols if not cfg.rule(c).is_ignored]
-    mismatch_cols = {
-        c: _mismatch_expr(
-            F.col(c + _OLD),
-            F.col(c + _NEW),
-            old_types[c],
-            new_types[c],
-            cfg.rule(c),
-            cfg.ignore_nulls,
-        )
-        for c in active_cols
-    }
-
-    in_both = F.col(_PRESENT_OLD).isNotNull() & F.col(_PRESENT_NEW).isNotNull()
-    old_only = F.col(_PRESENT_OLD).isNotNull() & F.col(_PRESENT_NEW).isNull()
-    new_only = F.col(_PRESENT_OLD).isNull() & F.col(_PRESENT_NEW).isNotNull()
-
-    # The full-outer join + per-field mismatch flags (including any
-    # fuzzy Arrow-UDF evaluation) are computed ONCE and cached: the
-    # eager metrics aggregation below materializes the cache, and the
-    # lazy ``exceptions`` melt then reads the same blocks instead of
-    # re-executing the join (round-2 verdict: the join ran twice — at
-    # warehouse scale, two sort-merge joins of both snapshots).  The
-    # cache is released via ``ReconcileResult.release()``; at 100-TB
-    # scale this persist is a written intermediate table, same dataflow.
-    from pyspark.storagelevel import StorageLevel
-
-    flag_names = {c: f"__mm_{i}" for i, c in enumerate(active_cols)}
+    flags = {c: f"__mm_{i}" for i, c in enumerate(active_cols)}
     flagged = merged.select(
-        "*", *[mismatch_cols[c].alias(flag_names[c]) for c in active_cols]
+        "*",
+        *[
+            _mismatch_expr(
+                F.col(c + _OLD),
+                F.col(c + _NEW),
+                old_types[c],
+                new_types[c],
+                cfg.rule(c),
+                cfg.ignore_nulls,
+            ).alias(flags[c])
+            for c in active_cols
+        ],
     )
-    if eager_metrics:
-        if not metrics_only:
-            flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
+    return flagged, flags, cfg
 
-        # Single aggregation pass computes every count the match formula
-        # needs (A1/A2) — one job, map-side partial agg, no collect loops.
-        if metrics_only and unique_pk and active_cols:
-            # union-aggregate metrics plan (see docstring): tag + union
-            # both sides, merge per key with ONE aggregation, then
-            # reduce to scalars — one wide exchange and no join, versus
-            # the full-outer path's two exchanges + sort-merge join.
-            # Only ACTIVE columns are carried: ignored compare columns
-            # never enter the shuffle.  The per-key merge plans as
-            # SortAggregate, not HashAggregate — Max's aggregation
-            # buffer must be UnsafeRow-mutable for hash aggregation and
-            # neither a struct nor a string buffer is — so the plan
-            # still sorts by pk (r7 tested the flattened per-column
-            # max(): same SortAggregate for the string columns and a
-            # ~14% wider exchange than the packed struct, 29.8 ->
-            # 34.0 MiB at sf0.1, so the struct form is kept; see
-            # OPTIMIZATION_r07.md "a1_match_metrics").
-            o_t = T.StructType(
-                [T.StructField(c, old_types[c]) for c in active_cols]
-            )
-            n_t = T.StructType(
-                [T.StructField(c, new_types[c]) for c in active_cols]
-            )
-            tagged = df_old.select(
-                *pk_cols,
-                F.struct(*active_cols).alias("__o"),
-                F.lit(None).cast(n_t).alias("__n"),
-            ).unionByName(
-                df_new.select(
-                    *pk_cols,
-                    F.lit(None).cast(o_t).alias("__o"),
-                    F.struct(*active_cols).alias("__n"),
-                )
-            )
-            # max() skips nulls, so it picks each side's single struct
-            # (unique_pk is exactly the assertion that makes this the
-            # same merged row the full-outer join would produce)
-            per_key = tagged.groupBy(*pk_cols).agg(
-                F.max("__o").alias("__o"),
-                F.max("__n").alias("__n"),
-                F.count("__o").alias("__ho"),
-                F.count("__n").alias("__hn"),
-            )
-            u_both = (F.col("__ho") > 0) & (F.col("__hn") > 0)
-            u_flags = {
-                c: _mismatch_expr(
-                    F.col("__o").getField(c),
-                    F.col("__n").getField(c),
-                    old_types[c],
-                    new_types[c],
-                    cfg.rule(c),
-                    cfg.ignore_nulls,
-                )
-                for c in active_cols
-            }
-            agg_src = per_key.agg(
-                F.sum(u_both.cast("long")).alias("n_both"),
-                F.sum(((F.col("__ho") > 0) & (F.col("__hn") == 0)).cast("long")).alias(
-                    "n_old_only"
-                ),
-                F.sum(((F.col("__ho") == 0) & (F.col("__hn") > 0)).cast("long")).alias(
-                    "n_new_only"
-                ),
-                *[
-                    F.sum((u_both & u_flags[c]).cast("long")).alias(f"exc_{i}")
-                    for i, c in enumerate(active_cols)
-                ],
-            )
-            if _metrics_plan_probe is not None:
-                _metrics_plan_probe(agg_src)
-            agg_row = agg_src.collect()[0]
-        else:
-            agg_src = flagged.agg(
-                F.sum(in_both.cast("long")).alias("n_both"),
-                F.sum(old_only.cast("long")).alias("n_old_only"),
-                F.sum(new_only.cast("long")).alias("n_new_only"),
-                *[
-                    F.sum((in_both & F.col(flag_names[c])).cast("long")).alias(
-                        f"exc_{i}"
-                    )
-                    for i, c in enumerate(active_cols)
-                ],
-            )
-            if _metrics_plan_probe is not None:
-                _metrics_plan_probe(agg_src)
-            agg_row = agg_src.collect()[0]
-        n_both = agg_row["n_both"] or 0
-        n_old_only = agg_row["n_old_only"] or 0
-        n_new_only = agg_row["n_new_only"] or 0
-        per_field = {
-            c: (agg_row[f"exc_{i}"] or 0) for i, c in enumerate(active_cols)
-        }
-        field_exceptions = sum(per_field.values())
 
-        # A1 — exact reference formula (compare.py:298-308).
-        denom = n_both * len(active_cols)
-        match_pct = (
-            round(100.0 * (denom - field_exceptions) / denom, 2)
-            if denom > 0
-            else 100.0
-        )
-    else:
-        n_both = n_old_only = n_new_only = 0
-        per_field = {}
-        field_exceptions = 0
-        match_pct = float("nan")
+def _metrics(flagged: DataFrame, flags: dict[str, str]) -> ReconcileMetrics:
+    """Every count the match formula needs in ONE aggregation job
+    (map-side partial aggregation, no collect loops)."""
+    in_both, old_only, new_only = _presence()
+    row = flagged.agg(
+        F.sum(in_both.cast("long")).alias("n_both"),
+        F.sum(old_only.cast("long")).alias("n_old_only"),
+        F.sum(new_only.cast("long")).alias("n_new_only"),
+        *[
+            F.sum((in_both & F.col(flag)).cast("long")).alias(f"exc_{i}")
+            for i, flag in enumerate(flags.values())
+        ],
+    ).collect()[0]
+    n_both = row["n_both"] or 0
+    per_field = {c: (row[f"exc_{i}"] or 0) for i, c in enumerate(flags)}
+    field_exceptions = sum(per_field.values())
 
-    # R1 + R2 fused: wide -> long exception melt via ONE
-    # array+filter+explode over the flagged join — field-mismatch
-    # structs (gated on in_both) and the _record_status struct (gated on
-    # the presence flags) in the same array, so the exception stream is
-    # a SINGLE pass over a SINGLE execution of the snapshot join.  The
-    # previous 3-branch union (deleted/added/field melt) re-executed the
-    # full-outer join once per branch on the eager_metrics=False path —
-    # Catalyst split it into three separate joins with six scans (at
-    # warehouse scale: three shuffle joins of both snapshots instead of
-    # one; measured plan: 6 scans -> 2, 3 joins -> 1).
+    # A1 — exact reference formula (compare.py:298-308).
+    denom = n_both * len(flags)
+    match_pct = round(100.0 * (denom - field_exceptions) / denom, 2) if denom else 100.0
+    return ReconcileMetrics(
+        match_pct=match_pct,
+        n_both=n_both,
+        n_old_only=row["n_old_only"] or 0,
+        n_new_only=row["n_new_only"] or 0,
+        field_exception_count=field_exceptions,
+        per_field_exceptions=per_field,
+    )
+
+
+def _melt(
+    flagged: DataFrame,
+    pk_cols: list[str],
+    flags: dict[str, str],
+    include_missing_records: bool,
+) -> DataFrame:
+    """R1 + R2 fused: ONE array+filter+explode over the flagged join
+    carries the field-mismatch structs (gated on in_both) and the
+    ``_record_status`` struct (gated on the presence flags), so the
+    exception stream is a single pass over one execution of the join."""
+    in_both, old_only, new_only = _presence()
+
     def _s(col: Column) -> Column:
         return col.cast("string")
 
@@ -415,7 +302,7 @@ def reconcile(
 
     melt_structs = [
         F.when(
-            in_both & F.col(flag_names[c]),
+            in_both & F.col(flag),
             _struct(
                 F.lit(c),
                 _s(F.col(c + _OLD)),
@@ -423,9 +310,9 @@ def reconcile(
                 F.lit(None).cast("string"),
             ),
         )
-        for c in active_cols
+        for c, flag in flags.items()
     ]
-    if cfg.include_missing_records:
+    if include_missing_records:
         # R2 (compare.py:229-254) as the leading array slot.
         melt_structs.insert(
             0,
@@ -452,7 +339,7 @@ def reconcile(
         "array<struct<field:string,old:string,new:string,change_type:string>>"
     )
 
-    exceptions = (
+    return (
         flagged.select(
             *pk_cols,
             F.explode(F.filter(all_structs, lambda x: x.isNotNull())).alias("e"),
@@ -460,13 +347,46 @@ def reconcile(
         .select(*pk_cols, "e.field", "e.old", "e.new", "e.change_type")
     )
 
+
+def reconcile(
+    df_old: DataFrame,
+    df_new: DataFrame,
+    pk_cols: list[str],
+    cfg: ReconConfig | dict | None = None,
+) -> ReconcileResult:
+    """Metrics plus the lazy exception stream over one cached flagged
+    join — the reference ``run_compare(df_old, df_new, pk_cols, cfg)``
+    contract (``test_comparison_logic.py:13``).  Call ``release()`` once
+    ``exceptions`` has been consumed."""
+    flagged, flags, cfg = _flagged_join(df_old, df_new, pk_cols, cfg)
+    # the metrics job materializes the cache and the melt scans it, so the
+    # join runs once (at warehouse scale: a written intermediate table)
+    cached = flagged.persist(StorageLevel.MEMORY_AND_DISK)
     return ReconcileResult(
-        match_pct=match_pct,
-        exceptions=exceptions,
-        n_both=n_both,
-        n_old_only=n_old_only,
-        n_new_only=n_new_only,
-        field_exception_count=field_exceptions,
-        per_field_exceptions=per_field,
-        _persisted=flagged if (eager_metrics and not metrics_only) else None,
+        **vars(_metrics(cached, flags)),
+        exceptions=_melt(cached, pk_cols, flags, cfg.include_missing_records),
+        _cached=cached,
     )
+
+
+def reconcile_metrics(
+    df_old: DataFrame,
+    df_new: DataFrame,
+    pk_cols: list[str],
+    cfg: ReconConfig | dict | None = None,
+) -> ReconcileMetrics:
+    """The scalar metrics only; nothing is cached."""
+    flagged, flags, _ = _flagged_join(df_old, df_new, pk_cols, cfg)
+    return _metrics(flagged, flags)
+
+
+def reconcile_exceptions(
+    df_old: DataFrame,
+    df_new: DataFrame,
+    pk_cols: list[str],
+    cfg: ReconConfig | dict | None = None,
+) -> DataFrame:
+    """The lazy exception stream only (pk..., field, old, new,
+    change_type); nothing is cached or needs releasing."""
+    flagged, flags, cfg = _flagged_join(df_old, df_new, pk_cols, cfg)
+    return _melt(flagged, pk_cols, flags, cfg.include_missing_records)

@@ -21,7 +21,10 @@ from pyspark.sql import functions as F
 
 from data_reconciliation_spark.functions.normalize import normalized_text
 from data_reconciliation_spark.functions.similarity import levenshtein_similarity
-from data_reconciliation_spark.operators.reconcile import reconcile
+from data_reconciliation_spark.operators.reconcile import (
+    reconcile_exceptions,
+    reconcile_metrics,
+)
 from data_reconciliation_spark.sources.readers import read_table
 
 # ---------------------------------------------------------------------------
@@ -126,12 +129,10 @@ WHERE o.o_orderkey IS NULL
 
 def q_reconcile_exceptions(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = _snapshots(spark, sf_dir)
-    # eager_metrics=False: only the exception stream is consumed, so the
-    # metrics agg (and its session-lifetime flagged-join cache — the
-    # round-3 leak) is skipped; the join runs ONCE, when the driver
-    # materializes the returned DataFrame.
-    res = reconcile(old, new, ["o_orderkey"], RECON_CFG, eager_metrics=False)
-    return res.exceptions.select("o_orderkey", "field", "old", "new")
+    # only the exception stream is consumed: no metrics job and no cache;
+    # the join runs once, when the caller materializes the DataFrame.
+    exc = reconcile_exceptions(old, new, ["o_orderkey"], RECON_CFG)
+    return exc.select("o_orderkey", "field", "old", "new")
 
 
 # DuckDB replicates the full exception surface: record-status rows from
@@ -176,15 +177,9 @@ FROM both_rows WHERE o_orderpriority IS DISTINCT FROM n_orderpriority
 
 def q_a1_match_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = _snapshots(spark, sf_dir)
-    # metrics_only: only the scalar metrics are consumed — no flagged-
-    # join persist to write or release (round-5 verdict #5: the cache
-    # write was ~55% of this query's first-invocation headline).
-    # unique_pk: o_orderkey is the orders PK, so the metrics use the
-    # union-aggregate plan (one exchange, no sorts) instead of the
-    # full-outer sort-merge join — oracle-verified identical.
-    res = reconcile(
-        old, new, ["o_orderkey"], RECON_CFG, metrics_only=True, unique_pk=True
-    )
+    # only the scalars are consumed: one aggregation over the join, with
+    # no flagged-join cache to write or release.
+    res = reconcile_metrics(old, new, ["o_orderkey"], RECON_CFG)
     return spark.createDataFrame(
         [
             (

@@ -73,4 +73,4 @@ def run_compare_oracle(df_old: pd.DataFrame, df_new: pd.DataFrame, pk_cols, cfg=
 
     denom = len(both) * len(active)
     match_pct = round(100 * (denom - field_exceptions) / denom, 2) if denom else 100.0
-    return {"match_pct": match_pct, "exceptions": exceptions}
+    return {"match_pct": match_pct, "n_both": len(both), "exceptions": exceptions}

@@ -11,8 +11,6 @@ persists that are NOT caller-visible caches.
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,25 +107,29 @@ def test_link_release(spark, clean_cache):
 
 
 def test_reconcile_lazy_metrics_no_cache(spark, clean_cache):
-    from data_reconciliation_spark.operators.reconcile import reconcile
+    from data_reconciliation_spark.operators.reconcile import (
+        reconcile,
+        reconcile_exceptions,
+        reconcile_metrics,
+    )
 
     df_old = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, v string")
     df_new = spark.createDataFrame([(1, "a"), (2, "x"), (4, "d")], "id long, v string")
-    res = reconcile(df_old, df_new, ["id"], {"fields": {}}, eager_metrics=False)
-    # no cache is ever created on the lazy path
-    got = {(r["id"], r["field"]) for r in res.exceptions.collect()}
+    # neither single-output entry point ever creates a cache
+    metrics = reconcile_metrics(df_old, df_new, ["id"], {"fields": {}})
+    assert _cache_empty(spark)
+    exceptions = reconcile_exceptions(df_old, df_new, ["id"], {"fields": {}})
+    got = {(r["id"], r["field"]) for r in exceptions.collect()}
     assert (2, "v") in got
     assert _cache_empty(spark)
-    assert math.isnan(res.match_pct)
-    res.release()  # no-op, must not raise
 
-    # identical exception rows to the eager path
+    # identical metrics and exception rows to the cached path
     eager = reconcile(df_old, df_new, ["id"], {"fields": {}})
     try:
         assert {
             (r["id"], r["field"]) for r in eager.exceptions.collect()
         } == got
-        assert not math.isnan(eager.match_pct)
+        assert (metrics.match_pct, metrics.n_both) == (eager.match_pct, 2)
     finally:
         eager.release()
     assert _cache_empty(spark)

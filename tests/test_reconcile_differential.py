@@ -6,11 +6,16 @@ from __future__ import annotations
 
 import random
 import string
+from collections import Counter
 
 import pandas as pd
 import pytest
 
-from data_reconciliation_spark.operators.reconcile import reconcile
+from data_reconciliation_spark.operators.reconcile import (
+    reconcile,
+    reconcile_exceptions,
+    reconcile_metrics,
+)
 from tests.oracle_pandas import run_compare_oracle
 
 
@@ -80,3 +85,49 @@ def test_differential_random(spark, seed, ignore_nulls):
     got = {(r["id"], r["field"]) for r in res.exceptions.collect()}
     want = {(e["id"], e["field"]) for e in expected["exceptions"]}
     assert got == want
+
+
+def test_duplicate_keys_multiply_rows_like_the_oracle(spark):
+    """A key repeated on one side joins once per copy, as in the
+    reference's pandas merge: every entry point counts each joined row."""
+    cols = ["id", "name", "amount"]
+    pdf_old = pd.DataFrame(
+        [(1, "a", 1.0), (1, "b", 2.0), (2, "c", 3.0), (3, "d", 4.0), (4, "e", 5.0)],
+        columns=cols,
+    )
+    pdf_new = pd.DataFrame(
+        [(1, "a", 1.0), (2, "c", 3.5), (3, "d", 4.0), (3, "x", 4.0), (5, "f", 6.0)],
+        columns=cols,
+    )
+    cfg = {
+        "include_missing_records": True,
+        "fields": {"amount": {"type": "decimal", "tolerance": 0.1}},
+    }
+    expected = run_compare_oracle(pdf_old, pdf_new, ["id"], cfg)
+    want_rows = Counter((e["id"], e["field"]) for e in expected["exceptions"])
+    want_per_field = Counter(
+        e["field"] for e in expected["exceptions"] if e["field"] != "_record_status"
+    )
+    assert expected["n_both"] == 5  # keys 1 and 3 each join twice
+
+    schema = "id long, name string, amount double"
+    df_old = spark.createDataFrame(pdf_old, schema)
+    df_new = spark.createDataFrame(pdf_new, schema)
+    full = reconcile(df_old, df_new, ["id"], cfg)
+    try:
+        metrics = reconcile_metrics(df_old, df_new, ["id"], cfg)
+        streams = {
+            "reconcile": full.exceptions,
+            "reconcile_exceptions": reconcile_exceptions(df_old, df_new, ["id"], cfg),
+        }
+        for res in (full, metrics):
+            assert res.n_both == expected["n_both"]
+            assert res.per_field_exceptions == {
+                c: want_per_field[c] for c in ("name", "amount")
+            }
+            assert res.match_pct == expected["match_pct"]
+        for name, stream in streams.items():
+            got = Counter((r["id"], r["field"]) for r in stream.collect())
+            assert got == want_rows, name
+    finally:
+        full.release()

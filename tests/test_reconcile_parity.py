@@ -10,10 +10,16 @@ recorded in ``COMPARISON_ENGINE_FIXES.md:82-97``:
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import types as T
 
-from data_reconciliation_spark.operators.reconcile import reconcile
+from data_reconciliation_spark.operators.reconcile import (
+    reconcile,
+    reconcile_exceptions,
+    reconcile_metrics,
+)
 
 NULL_SCHEMA = T.StructType(
     [
@@ -215,76 +221,6 @@ def test_unparsable_decimal_is_mismatch(spark):
     assert _exc_set(res) == {(2, "v")}
 
 
-def test_metrics_only_matches_default_path(snapshots):
-    """metrics_only (round-5 verdict #5 fast path for A1 consumers):
-    identical scalar metrics with NO persisted cache, and the lazy
-    exceptions stream still yields the same rows (recomputed)."""
-    df_old, df_new = snapshots
-    cfg = {
-        "ignore_nulls": False,
-        "include_missing_records": False,
-        "fields": FIELD_CFG,
-    }
-    full = reconcile(df_old, df_new, ["id"], cfg)
-    fast = reconcile(df_old, df_new, ["id"], cfg, metrics_only=True)
-    assert fast._persisted is None  # nothing cached, nothing to release
-    assert (
-        fast.match_pct,
-        fast.n_both,
-        fast.n_old_only,
-        fast.n_new_only,
-        fast.field_exception_count,
-        fast.per_field_exceptions,
-    ) == (
-        full.match_pct,
-        full.n_both,
-        full.n_old_only,
-        full.n_new_only,
-        full.field_exception_count,
-        full.per_field_exceptions,
-    )
-    assert _exc_set(fast) == _exc_set(full)
-    full.release()
-    fast.release()  # no-op by contract
-
-
-def test_metrics_only_unique_pk_matches_join_path(snapshots):
-    """unique_pk union-aggregate metrics plan (round-7): identical
-    scalars to the join-based metrics_only path, including the null-
-    gate, fuzzy, and tolerance rules (the fixture exercises all three
-    plus missing records on both sides)."""
-    df_old, df_new = snapshots
-    cfg = {
-        "ignore_nulls": False,
-        "include_missing_records": True,
-        "fields": FIELD_CFG,
-    }
-    # drop one id per side so n_old_only / n_new_only are non-zero
-    join_based = reconcile(
-        df_old.where("id != 6"), df_new.where("id != 5"), ["id"], cfg,
-        metrics_only=True,
-    )
-    union_agg = reconcile(
-        df_old.where("id != 6"), df_new.where("id != 5"), ["id"], cfg,
-        metrics_only=True, unique_pk=True,
-    )
-    assert (
-        union_agg.match_pct,
-        union_agg.n_both,
-        union_agg.n_old_only,
-        union_agg.n_new_only,
-        union_agg.field_exception_count,
-        union_agg.per_field_exceptions,
-    ) == (
-        join_based.match_pct,
-        join_based.n_both,
-        join_based.n_old_only,
-        join_based.n_new_only,
-        join_based.field_exception_count,
-        join_based.per_field_exceptions,
-    )
-
-
 def _metrics(res):
     return (
         res.match_pct,
@@ -297,24 +233,37 @@ def _metrics(res):
 
 
 @pytest.mark.parametrize(
-    "fields",
+    "fields, drop_one_per_side",
     [
-        {**FIELD_CFG, "age": {"type": "ignore"}},
-        {c: {"type": "ignore"} for c in FIELD_CFG},
+        (FIELD_CFG, False),
+        ({**FIELD_CFG, "age": {"type": "ignore"}}, False),
+        ({c: {"type": "ignore"} for c in FIELD_CFG}, False),
+        (FIELD_CFG, True),
     ],
-    ids=["one_ignored", "all_ignored"],
+    ids=["field_cfg", "one_ignored", "all_ignored", "missing_both_sides"],
 )
-def test_metrics_only_unique_pk_ignored_columns(snapshots, fields):
-    """The union-aggregate plan carries only the non-ignored compare
-    columns; with none left it falls back to the join path.  Either way
-    its scalars equal the join-based metrics_only path's."""
+def test_entry_points_agree(snapshots, fields, drop_one_per_side):
+    """reconcile_metrics() gives reconcile()'s scalars and
+    reconcile_exceptions() gives its exception rows: the three entry
+    points build one join, one aggregation and one melt."""
     df_old, df_new = snapshots
+    if drop_one_per_side:
+        df_old, df_new = df_old.where("id != 6"), df_new.where("id != 5")
     cfg = {"ignore_nulls": False, "include_missing_records": True, "fields": fields}
-    old, new = df_old.where("id != 6"), df_new.where("id != 5")
-    join_based = reconcile(old, new, ["id"], cfg, metrics_only=True)
-    union_agg = reconcile(old, new, ["id"], cfg, metrics_only=True, unique_pk=True)
-    assert _metrics(union_agg) == _metrics(join_based)
-    assert "age" not in union_agg.per_field_exceptions
+    full = reconcile(df_old, df_new, ["id"], cfg)
+    try:
+        metrics = reconcile_metrics(df_old, df_new, ["id"], cfg)
+        assert _metrics(metrics) == _metrics(full)
+        exceptions = reconcile_exceptions(df_old, df_new, ["id"], cfg)
+        assert Counter(exceptions.collect()) == Counter(full.exceptions.collect())
+    finally:
+        full.release()
+    assert set(metrics.per_field_exceptions) == {
+        c for c, r in fields.items() if r["type"] != "ignore"
+    }
     if all(r["type"] == "ignore" for r in fields.values()):
-        assert union_agg.match_pct == 100.0
-        assert union_agg.field_exception_count == 0
+        assert metrics.match_pct == 100.0
+        assert metrics.field_exception_count == 0
+    assert (metrics.n_old_only, metrics.n_new_only) == (
+        (1, 1) if drop_one_per_side else (0, 0)
+    )

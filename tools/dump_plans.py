@@ -52,76 +52,6 @@ def main() -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         return simhash_pairs(docs, max_hamming=6, n_chunks=8)
 
-    def a1_metrics_plan(unique_pk: bool):
-        # The a1 query's real plan lives inside reconcile() (the declared
-        # DF is a literal of the collected scalars); capture the executed
-        # metrics aggregation via the _metrics_plan_probe hook.  The
-        # unique_pk=False call is the pre-r7 plan (full-outer merge +
-        # aggregate) — both paths still exist in the operator, so before
-        # and after are dumped from the same tree.
-        import importlib
-
-        rmod = importlib.import_module(
-            "data_reconciliation_spark.operators.reconcile"
-        )
-        from data_reconciliation_spark.plans.driver_queries import (
-            RECON_CFG,
-            _snapshots,
-        )
-
-        captured = []
-        rmod._metrics_plan_probe = captured.append
-        try:
-            old, new = _snapshots(spark, sf_dir)
-            rmod.reconcile(
-                old,
-                new,
-                ["o_orderkey"],
-                RECON_CFG,
-                metrics_only=True,
-                unique_pk=unique_pk,
-            )
-        finally:
-            rmod._metrics_plan_probe = None
-        return captured[0]
-
-    def cluster_entry_plan(assume_distinct: bool):
-        # The chain query's r7 change is inside connected_components (the
-        # entry distinct() shuffle is skipped when assume_distinct=True);
-        # the declared DF's own plan is the post-closure label table and
-        # does not show it.  Capture the normalized entry edge set via
-        # _entry_plan_probe, which aborts before the closure runs.
-        import importlib
-
-        cmod = importlib.import_module(
-            "data_reconciliation_spark.operators.cluster"
-        )
-        from pyspark.sql import functions as F
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
-        edges = ev.where(F.col("event_id") % 20 != 0).select(
-            F.format_string("n%09d", F.col("event_id")).alias("src"),
-            F.format_string("n%09d", F.col("event_id") - 1).alias("dst"),
-        )
-
-        captured = []
-
-        class _Abort(Exception):
-            pass
-
-        def probe(df):
-            captured.append(df)
-            raise _Abort
-
-        cmod._entry_plan_probe = probe
-        try:
-            cmod.connected_components(edges, assume_distinct=assume_distinct)
-        except _Abort:
-            pass
-        finally:
-            cmod._entry_plan_probe = None
-        return captured[0]
-
     plans = {
         "reconcile_exceptions": lambda: dq.q_reconcile_exceptions(spark, sf_dir),
         "j1_full_outer_merge": lambda: dq.q_j1_full_outer_merge(spark, sf_dir),
@@ -132,15 +62,6 @@ def main() -> None:
         "simhash_pairs": bench_simhash_df,
         "ann_cosine_topk": lambda: dq.q_ann_cosine_topk(spark, sf_dir),
         "text_stats": lambda: dq.q_text_stats(spark, sf_dir),
-        # suffix-aware: "before" dumps the pre-r7 plan variant that still
-        # exists in the operator (a1: unique_pk=False full-outer merge;
-        # cluster: entry distinct() not skipped)
-        "a1_match_metrics": lambda: a1_metrics_plan(
-            unique_pk=(suffix != "before")
-        ),
-        "cluster_chain_components": lambda: cluster_entry_plan(
-            assume_distinct=(suffix != "before")
-        ),
     }
     for name, fn in plans.items():
         if only and name not in only:
