@@ -162,18 +162,21 @@ def load_mapping(path: str) -> MappingConfig:
 @dataclass(frozen=True)
 class BlockingConfig:
     """Knobs for the ER blocking stage (engine extension; no reference
-    analog — the reference's only blocking key is the primary key)."""
+    analog — the reference's only blocking key is the primary key).
+
+    Every page is blocked on its normalized-URL host key plus its
+    MinHash-LSH band keys; ``blocking.bucket_pairs`` self-joins the
+    (id, block_key) table, salted against hot hosts.  The MinHash knobs
+    also configure ``dedup.minhash_lsh_pairs``."""
 
     num_hashes: int = 64          # MinHash signature length
     bands: int = 16               # LSH bands (rows = num_hashes // bands)
     shingle_size: int = 3         # token shingles for MinHash
-    use_host_key: bool = True     # normalized-URL-host blocking
-    use_minhash_bands: bool = True
-    salt_hot_keys: bool = True    # salted repartition for hot hosts
-    # Blocks above this member count are excluded from pairwise candidate
-    # generation (a 500-member block is already 125k pairs).  Content-based
-    # MinHash bands retain recall inside oversized host blocks — a hot host
-    # with millions of pages is a useless *blocking* signal anyway.
+    # Blocks above this member count are star-paired to their min-id
+    # member instead of self-joined (``bucket_pairs``; a 500-member block
+    # is already 125k pairs).  Content-based MinHash bands retain recall
+    # inside oversized host blocks — a hot host with millions of pages is
+    # a useless *blocking* signal anyway.
     max_block_size: int | None = 500
     # Shuffle 8-byte xxhash ids through the block self-join instead of
     # raw id strings (the widest exchange of the pipeline); real ids are

@@ -17,10 +17,14 @@ the 64-lane MinHash min runs in one Arrow kernel
 embarrassingly parallel, has no ml.Vector overhead, and is deterministic
 across cluster sizes.
 
+Candidate generation is one primitive, :func:`bucket_pairs` — a
+bucketed self-join with a hot-bucket star guard — shared by
+:func:`candidate_pairs` and the three ``dedup`` kernels.
+
 Skew: hot blocking keys (one host holding 20% of a crawl) are handled
-two ways — (a) oversized blocks are excluded from *pairwise* candidate
-generation (content-based band keys retain recall inside them) and
-(b) ``salted_repartition`` spreads residual hot keys across
+two ways — (a) oversized blocks are star-paired to their min-id member
+instead of self-joined (content-based band keys retain recall inside
+them) and (b) ``salted_repartition`` spreads residual hot keys across
 ``salt`` × partitions before the self-join (AQE's skew-join splitting
 covers the sort-merge side; salting covers the logical key itself).
 """
@@ -237,25 +241,19 @@ def band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
 def with_blocking_keys(pages: DataFrame, cfg: BlockingConfig | None = None) -> DataFrame:
     """Add ``block_keys: array<string>`` (host key + LSH band keys)."""
     cfg = cfg or BlockingConfig()
-    keys = []
-    if cfg.use_minhash_bands:
-        # the signature is its own (Generate-pinned) column: band_keys
-        # slices it once per band, and HOF lambdas re-evaluate inlined
-        # subexpressions per element
-        pages = attach_minhash_signature(
-            pages,
-            token_shingles("text", cfg.shingle_size),
-            "__minhash_sig",
-            cfg.num_hashes,
-        )
-        keys.append(band_keys(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band))
-    if cfg.use_host_key:
-        keys.insert(0, F.array(F.concat(F.lit("host:"), normalized_host("url"))))
-    if not keys:
-        raise ValueError("at least one blocking strategy must be enabled")
-    combined = keys[0]
-    for k in keys[1:]:
-        combined = F.concat(combined, k)
+    # the signature is its own (Generate-pinned) column: band_keys
+    # slices it once per band, and HOF lambdas re-evaluate inlined
+    # subexpressions per element
+    pages = attach_minhash_signature(
+        pages,
+        token_shingles("text", cfg.shingle_size),
+        "__minhash_sig",
+        cfg.num_hashes,
+    )
+    combined = F.concat(
+        F.array(F.concat(F.lit("host:"), normalized_host("url"))),
+        band_keys(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band),
+    )
     return pages.withColumn("block_keys", combined).drop("__minhash_sig")
 
 
@@ -293,34 +291,90 @@ def salted_repartition(
     return df.repartition(num_partitions, F.col(key_col), salt)
 
 
+def bucket_pairs(
+    keyed: DataFrame,
+    keys: list[str],
+    id_col: str,
+    max_size: int | None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Every two rows of ``keyed`` that share a bucket (equal ``keys``),
+    as ``(id_a, id_b, <carry>_a..., <carry>_b...)`` with ``id_a < id_b``:
+    the engine's one candidate-generation self-join (ER blocking and the
+    three dedup kernels), which each caller follows with its own filter
+    and verify.  A pair comes out once per bucket the two rows share;
+    deduplicating is the caller's job.
+
+    Hot-bucket guard: a bucket with more than ``max_size`` members is not
+    self-joined (an O(n²) partition); each member pairs with the bucket's
+    min-id member instead — the star, O(n) pairs — whose ``carry``
+    columns come along through ``min_by``.  A giant *duplicate* cluster
+    shares every bucket, so the star (unlike dropping the bucket) keeps
+    it connected for the closure.  Recall under the cap is exact for
+    identical-member buckets and best-effort for mixed ones;
+    ``max_size=None`` self-joins every bucket.
+    """
+    out = ["id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry]]
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    star = None
+    if max_size is not None:
+        hot = keyed.groupBy(*keys).count().where(F.col("count") > max_size).select(*keys)
+        members = keyed.join(F.broadcast(hot), keys, "semi")
+        reps = members.groupBy(*keys).agg(
+            F.min(id_col).alias("id_a"),
+            *[F.min_by(c, F.col(id_col)).alias(f"{c}_a") for c in carry],
+        )
+        # the rep is the bucket minimum, so rep < member for every
+        # member that is not the rep itself
+        star = (
+            side(members, "b")
+            .join(reps, keys)
+            .where(F.col("id_a") < F.col("id_b"))
+            .select(*out)
+        )
+        keyed = keyed.join(F.broadcast(hot), keys, "left_anti")
+    pairs = (
+        side(keyed, "a")
+        .join(side(keyed, "b"), keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(*out)
+    )
+    return pairs if star is None else pairs.unionByName(star)
+
+
 def candidate_pairs(
     pages: DataFrame,
     cfg: BlockingConfig | None = None,
     id_col: str = "url",
-    payload_cols: tuple[str, ...] = (),
     keep_hashed_ids: bool = False,
 ) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) from all blocking keys.
+    """Distinct candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, from
+    all blocking keys: :func:`bucket_pairs` over the (id, block_key)
+    table, then one ``distinct`` over the two ids.
 
-    Oversized blocks (> cfg.max_block_size members) are excluded from the
-    pairwise explosion — an O(n²)-guard; the MinHash band keys inside such
-    blocks still generate content-similar candidates because band keys
-    partition by *content*, not host.  Excluded block stats are returned
-    via ``candidate_pairs.stats`` on the driver for lineage/metrics.
+    Oversized blocks (> ``cfg.max_block_size`` members) are star-paired
+    to their min-id member instead of self-joined; the MinHash band keys
+    inside such blocks still generate content-similar candidates because
+    band keys partition by *content*, not host.
 
     ``keep_hashed_ids`` (with ``cfg.dictionary_ids``): skip the two
     mapping joins that translate the 8-byte dictionary ids back to real
     ids — the caller joins its per-id payload keyed by
     ``xxhash64(id)`` instead and recovers the real id from the payload
-    row, saving two passes over the (wide) pair table.  Requires
-    ``payload_cols == ()``; pair ordering ``id_a < id_b`` is then on
-    the hash domain.  An xxhash64 birthday collision double-attaches a
-    payload (a duplicated candidate pair — scored identically, harmless
-    to closure) rather than losing anything.
+    row, saving two passes over the pair table.  Pair ordering
+    ``id_a < id_b`` is then on the hash domain.  An xxhash64 birthday
+    collision double-attaches a payload (a duplicated candidate pair —
+    scored identically, harmless to closure) rather than losing
+    anything.
     """
     cfg = cfg or BlockingConfig()
-    if keep_hashed_ids and payload_cols:
-        raise ValueError("keep_hashed_ids requires payload_cols=()")
     keyed = with_blocking_keys(pages, cfg)
     blocks = exploded_blocks(keyed, id_col)
 
@@ -338,91 +392,32 @@ def candidate_pairs(
             F.xxhash64("block_key").alias("block_key"), uid.alias(id_col)
         )
 
-    # Materialize the block table: it is consumed three times (size
-    # histogram + both sides of the self-join), and the MinHash key
-    # expression must not be re-evaluated per consumer.  (Interpreted HOF
-    # expressions also re-evaluate referenced sub-expressions per array
-    # element, so keeping this lazy multiplies the upstream plan cost.)
-    # At warehouse scale this persist becomes an explicit intermediate
-    # table write; same dataflow.
+    # Materialize the block table, salted so no single partition owns
+    # a hot host: bucket_pairs consumes it several times, and the
+    # MinHash key expression must not be re-evaluated per consumer.
+    # Registered on the returned pairs — the caller (or the composing
+    # operator, see scoring.block_score_pipeline) releases it via
+    # lifecycle.release_cached after materializing.
     from pyspark.storagelevel import StorageLevel
 
-    if cfg.salt_hot_keys:
-        # spread hot blocking keys across salt_buckets shuffle keys before
-        # materialization so no single partition owns a hot host (AQE can
-        # split skewed SMJ partitions later, but balanced storage +
-        # balanced map tasks need the salt at write time).
-        blocks = salted_repartition(blocks, "block_key", salt_buckets=16, id_col=id_col)
-    # registered on the returned pairs — caller (or the composing
-    # operator, see scoring.block_score_pipeline) releases via
-    # lifecycle.release_cached after materializing
-    blocks_cache = blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    from data_reconciliation_spark.lifecycle import register_cached
 
-    # Skew guard: per-key counts; oversized blocks are excluded from the
-    # quadratic self-join (broadcast the small hot-key list back) but
-    # STAR-PAIRED to their min-id member instead of dropped outright —
-    # a giant *duplicate* cluster shares every band key, so pure
-    # dropping would lose it from every block; the star keeps O(n)
-    # pairs per hot block and preserves connectivity for the
-    # downstream transitive closure.
-    star = None
-    if cfg.max_block_size is not None:
-        sizes = blocks.groupBy("block_key").count()
-        hot = sizes.where(F.col("count") > cfg.max_block_size).select("block_key")
-        hot_members = blocks.join(F.broadcast(hot), "block_key", "semi")
-        reps = hot_members.groupBy("block_key").agg(F.min(id_col).alias("__rep"))
-        star = (
-            hot_members.join(reps, "block_key")
-            .where(F.col(id_col) != F.col("__rep"))
-            .select(
-                F.least(F.col("__rep"), F.col(id_col)).alias("id_a"),
-                F.greatest(F.col("__rep"), F.col(id_col)).alias("id_b"),
-                "block_key",
-            )
-        )
-        blocks = blocks.join(F.broadcast(hot), "block_key", "left_anti")
-
-    a = blocks.select(F.col("block_key"), F.col(id_col).alias("id_a"))
-    b = blocks.select(F.col("block_key"), F.col(id_col).alias("id_b"))
-    pairs = a.join(b, "block_key").where(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b", "block_key"
-    )
-    if star is not None:
-        pairs = pairs.unionByName(star)
-    pairs = pairs.groupBy("id_a", "id_b").agg(F.min("block_key").alias("block_key"))
-    if cfg.dictionary_ids and keep_hashed_ids:
-        from data_reconciliation_spark.lifecycle import register_cached
-
-        return register_cached(pairs, blocks_cache)
-    if cfg.dictionary_ids:
+    blocks = salted_repartition(
+        blocks, "block_key", salt_buckets=16, id_col=id_col
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = bucket_pairs(blocks, ["block_key"], id_col, cfg.max_block_size).distinct()
+    if cfg.dictionary_ids and not keep_hashed_ids:
         # map compact uids back to real ids and re-orient so
         # id_a < id_b holds on the REAL id domain (the dedup ordering
         # above was on hashes).
-        ma = mapping.select(
-            F.col("__uid").alias("id_a"), F.col(id_col).alias("__ra")
-        )
-        mb = mapping.select(
-            F.col("__uid").alias("id_b"), F.col(id_col).alias("__rb")
-        )
+        ma = mapping.select(F.col("__uid").alias("id_a"), F.col(id_col).alias("__ra"))
+        mb = mapping.select(F.col("__uid").alias("id_b"), F.col(id_col).alias("__rb"))
         pairs = (
             pairs.join(ma, "id_a")
             .join(mb, "id_b")
             .select(
                 F.least("__ra", "__rb").alias("id_a"),
                 F.greatest("__ra", "__rb").alias("id_b"),
-                "block_key",
             )
         )
-    if payload_cols:
-        pa = pages.select(
-            F.col(id_col).alias("id_a"),
-            *[F.col(c).alias(f"{c}_a") for c in payload_cols],
-        )
-        pb = pages.select(
-            F.col(id_col).alias("id_b"),
-            *[F.col(c).alias(f"{c}_b") for c in payload_cols],
-        )
-        pairs = pairs.join(pa, "id_a").join(pb, "id_b")
-    from data_reconciliation_spark.lifecycle import register_cached
-
-    return register_cached(pairs, blocks_cache)
+    return register_cached(pairs, blocks)

@@ -12,8 +12,11 @@ over a ``documents(doc_id, text, ...)``-shaped table.
 * embedding_cosine_pairs — near-dup via embedding cosine (see
   similarity_search for the ANN variants)
 
-All blocking joins are equi-joins on derived keys (shuffle on the key,
-map-side combine first), so they scale with the shuffle, never with n².
+ngram_jaccard_pairs, minhash_lsh_pairs and simhash_pairs generate
+candidates with one primitive, ``blocking.bucket_pairs``: an equi-join
+on a derived bucket key (n-gram block, LSH band, SimHash chunk) with a
+star guard for hot buckets, so they scale with the shuffle, never with
+n².  Each kernel keeps only its own filter-then-verify step.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from data_reconciliation_spark.lifecycle import register_cached
 from data_reconciliation_spark.operators.blocking import (
     attach_minhash_signature,
     band_hashes,
+    bucket_pairs,
     token_shingles,
     token_shingles_from,
 )
@@ -76,18 +80,17 @@ def ngram_jaccard_pairs(
     deprecated in round 3 and removed in round 5 — it degenerated to
     near-global blocks on homogeneous corpora); at corpus scale use
     minhash_lsh_pairs — this operator is the verify kernel /
-    small-block path.  ``max_block_size`` (same O(n²) guard as the
-    siblings) star-pairs oversized blocks to their min-id member:
-    identical-doc clusters keep jaccard-1.0 star pairs (connectivity
-    preserved); unrelated same-bucket members fail the threshold on the
-    star pair exactly as they would pairwise.  Pass
+    small-block path.  ``max_block_size`` (``bucket_pairs``' O(n²)
+    guard, shared with the siblings) star-pairs oversized blocks to
+    their min-id member: identical-doc clusters keep jaccard-1.0 star
+    pairs (connectivity preserved); unrelated same-bucket members fail
+    the threshold on the star pair exactly as they would pairwise.  Pass
     ``max_block_size=None`` for exact all-pairs semantics (e.g. oracle
     checks).
 
     The caller releases the internal block cache with
     ``lifecycle.release_cached(result)`` after materializing.
     """
-    toks = F.split(normalized_text(F.col(text_col)), " ")
     if block_col is None:
         # The implicit length bucket completed its deprecation cycle
         # (round-3 #6 warning -> round-5 error, per the deprecation
@@ -112,94 +115,23 @@ def ngram_jaccard_pairs(
         F.col(id_col), (F.col(block_col) if isinstance(block_col, str) else block_col).alias("block"),
         F.array_distinct(grams).alias("grams"),
     )
-    star = None
     base_cache = None
     if max_block_size is not None:
         # consumed by the size histogram, the star branch and both
         # self-join sides; registered on the result for caller release
         base_cache = base = base.persist()
-        sizes = base.groupBy("block").count()
-        hot = sizes.where(F.col("count") > max_block_size).select("block")
-        hot_members = base.join(F.broadcast(hot), "block", "semi")
-        reps = hot_members.groupBy("block").agg(
-            F.min(id_col).alias("__rep"),
-            F.min_by("grams", F.col(id_col)).alias("__rep_grams"),
-        )
-        star = (
-            hot_members.join(reps, "block")
-            .where(F.col(id_col) != F.col("__rep"))
-            .select(
-                F.col("__rep").alias("id_a"),
-                F.col(id_col).alias("id_b"),
-                F.col("__rep_grams").alias("grams_a"),
-                F.col("grams").alias("grams_b"),
-            )
-        )
-        base = base.join(F.broadcast(hot), "block", "left_anti")
-    a = base.select(
-        F.col(id_col).alias("id_a"), "block", F.col("grams").alias("grams_a")
-    )
-    b = base.select(
-        F.col(id_col).alias("id_b"), "block", F.col("grams").alias("grams_b")
-    )
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
     jac = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-    cand = (
-        a.join(b, "block")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "grams_a", "grams_b")
-    )
-    if star is not None:
-        # disjoint by construction: each doc carries exactly one block
-        # key, and hot blocks are excluded from the pairwise join — no
-        # dedup shuffle needed
-        cand = cand.unionByName(star)
+    # each doc carries exactly one block key, so every pair comes out of
+    # bucket_pairs once — no dedup shuffle needed
     out = (
-        cand.withColumn("jaccard", jac)
+        bucket_pairs(base, ["block"], id_col, max_block_size, carry=("grams",))
+        .withColumn("jaccard", jac)
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
     return register_cached(out, base_cache)
-
-
-def _widen_for_kernel(df: DataFrame, bytes_per_task: int = 64 << 10) -> DataFrame:
-    """Widen scan parallelism for a per-row compute-heavy signature pass
-    when the input arrives in fewer splits than the kernel cost wants.
-
-    Parquet splits at ``maxPartitionBytes`` (128 MB) size tasks for I/O,
-    not for compute: the md5-SimHash / MinHash kernels cost ~1-2 us per
-    input BYTE (measured: ~1.0 s per 600 KB single-split corpus), so a
-    single 128 MB split would serialize ~3-4 min of hashing onto one
-    core.  Target task size = ``bytes_per_task`` (64 KB ~= 100 ms of
-    kernel work), capped at the cluster parallelism; never shrinks an
-    input that already has enough splits, and derived (non-file-backed)
-    inputs are left untouched.  At warehouse scale inputs arrive in
-    thousands of splits >= core count, so this is a no-op there; A/B at
-    sf0.1 local[32]: simhash sig build 0.99-1.23 s serial -> 0.64-0.85 s
-    at the 8-way layout this picks (32-way measured WORSE — task launch
-    + Python worker spawn dominate 600 KB of work).
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not files or len(files) > 64:
-        return df
-    import os as _os
-
-    total = 0
-    for f in files:
-        p = f[5:] if f.startswith("file:") else f
-        try:
-            total += _os.stat(p).st_size
-        except OSError:
-            return df
-    sc = df.sparkSession.sparkContext
-    want = min(sc.defaultParallelism, max(1, total // bytes_per_task))
-    if want > df.rdd.getNumPartitions():
-        df = df.repartition(want)
-    return df
 
 
 def minhash_lsh_pairs(
@@ -227,7 +159,6 @@ def minhash_lsh_pairs(
     ``lifecycle.release_cached(result)`` after materializing.
     """
     cfg = cfg or BlockingConfig()
-    docs = _widen_for_kernel(docs)
 
     # ONE tokenization pass: the token array is materialized as its own
     # projection and feeds both the shingle/signature path and the
@@ -267,49 +198,16 @@ def minhash_lsh_pairs(
     keyed = per_doc.select(
         F.col(id_col), F.explode("__bks").alias("band_key")
     )
-    keyed_cache = per_doc
-    # Hot-bucket guard (same pattern as blocking.candidate_pairs): a
-    # degenerate band key (e.g. every near-empty doc sharing one band)
-    # would be an unguarded O(n^2) self-join partition.  Oversized
-    # buckets are STAR-PAIRED instead of dropped: every member pairs
-    # with the bucket's min-id representative — O(n) pairs per bucket.
-    # Dropping was wrong for giant *duplicate* clusters: identical docs
-    # share EVERY band, so no other band could retain recall and the
-    # biggest duplicate groups were missed entirely.  Recall under the
-    # cap: EXACT for identical-doc hot buckets (every star pair passes
-    # verify at jaccard 1.0, connectivity preserved); BEST-EFFORT for
-    # mixed hot buckets — two members of a non-representative cluster
-    # are linked only through their star pairs to the bucket minimum,
-    # which can fail the verify threshold (measured bound:
+    # Hot-bucket guard: a degenerate band key (e.g. every near-empty doc
+    # sharing one band) would be an unguarded O(n^2) self-join
+    # partition; bucket_pairs star-pairs it instead.  Identical docs
+    # share EVERY band, so the star keeps giant duplicate clusters
+    # (jaccard 1.0 star pairs); mixed hot buckets are best-effort
+    # (measured bound:
     # tests/test_dedup_and_search.py::test_mixed_hot_bucket_star_recall).
-    # NOTE pair-level output for over-cap buckets is the star subset,
-    # not all O(n^2) pairs — oracle-exact configurations must pass
-    # ``max_block_size=None``.
-    star_pairs = None
-    if cfg.max_block_size is not None:
-        hot = (
-            keyed.groupBy("band_key")
-            .count()
-            .where(F.col("count") > cfg.max_block_size)
-            .select("band_key")
-        )
-        hot_members = keyed.join(F.broadcast(hot), "band_key", "semi")
-        reps = hot_members.groupBy("band_key").agg(F.min(id_col).alias("__rep"))
-        star_pairs = (
-            hot_members.join(reps, "band_key")
-            .where(F.col(id_col) != F.col("__rep"))
-            # rep is the bucket min, so rep < member always
-            .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
-        )
-        keyed = keyed.join(F.broadcast(hot), "band_key", "left_anti")
-    a = keyed.select("band_key", F.col(id_col).alias("id_a"))
-    b = keyed.select("band_key", F.col(id_col).alias("id_b"))
-    pairs = a.join(b, "band_key").where(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b"
-    )
-    if star_pairs is not None:
-        pairs = pairs.unionByName(star_pairs)
-    pairs = pairs.distinct()
+    # Oracle-exact configurations pass ``max_block_size=None``.  A pair
+    # sharing several bands comes out once per band: dedup.
+    pairs = bucket_pairs(keyed, ["band_key"], id_col, cfg.max_block_size).distinct()
     if verify_threshold is not None:
         # verify on the HASHED distinct-token arrays from the per-doc
         # cache: tokenization + dedup ran once per DOCUMENT in the same
@@ -342,7 +240,7 @@ def minhash_lsh_pairs(
             .where(F.col("jaccard") >= verify_threshold)
             .select("id_a", "id_b", "jaccard")
         )
-    return register_cached(pairs, keyed_cache)
+    return register_cached(pairs, per_doc)
 
 
 def simhash_pairs(
@@ -371,9 +269,11 @@ def simhash_pairs(
 
     ``max_bucket_size`` guards degenerate buckets (e.g. thousands of
     near-empty docs all hashing to signature 0): oversized
-    (chunk_idx, chunk) buckets are excluded from the pairwise self-join —
-    the O(n²) guard; a pair inside a dropped bucket is still found via
-    any other chunk the two signatures agree on.
+    (chunk_idx, chunk) buckets are star-paired to their min-id member by
+    ``bucket_pairs`` instead of self-joined.  Star recall is exact for
+    identical-signature clusters (hamming 0 to the star) and best-effort
+    for mixed hot buckets — oracle-exact configurations pass
+    ``max_bucket_size=None``.
 
     The caller releases the internal signature cache with
     ``lifecycle.release_cached(result)`` after materializing.
@@ -382,7 +282,6 @@ def simhash_pairs(
         raise ValueError("n_chunks must divide 64")
     bits = 64 // n_chunks
     mask = (1 << bits) - 1
-    docs = _widen_for_kernel(docs)
     from pyspark.storagelevel import StorageLevel
 
     # persist: the chunk table feeds both self-join sides; the per-doc
@@ -407,60 +306,20 @@ def simhash_pairs(
             )
         ).alias("c"),
     ).select(id_col, "simhash", "c.chunk_idx", "c.chunk")
-    # Oversized (chunk_idx, chunk) buckets are star-paired to the
-    # bucket's min-id representative instead of dropped (O(n) pairs per
-    # bucket).  Giant *duplicate* clusters share every chunk, so
-    # dropping lost them entirely; the star keeps connectivity for
-    # transitive clustering.  Star recall is exact for identical-
-    # signature clusters (hamming(rep, m) = 0); for mixed hot buckets it
-    # is best-effort — oracle-exact configurations must pass
-    # ``max_bucket_size=None``.
-    star = None
-    if max_bucket_size is not None:
-        hot = (
-            chunks.groupBy("chunk_idx", "chunk")
-            .count()
-            .where(F.col("count") > max_bucket_size)
-            .select("chunk_idx", "chunk")
-        )
-        hot_members = chunks.join(F.broadcast(hot), ["chunk_idx", "chunk"], "semi")
-        reps = hot_members.groupBy("chunk_idx", "chunk").agg(
-            F.min(id_col).alias("__rep"),
-            F.min_by("simhash", F.col(id_col)).alias("__rep_sim"),
-        )
-        star = (
-            hot_members.join(reps, ["chunk_idx", "chunk"])
-            .where(F.col(id_col) != F.col("__rep"))
-            .select(
-                F.col("__rep").alias("id_a"),
-                F.col(id_col).alias("id_b"),
-                F.bit_count(
-                    F.col("__rep_sim").bitwiseXOR(F.col("simhash"))
-                ).alias("__h"),
-            )
-        )
-        chunks = chunks.join(F.broadcast(hot), ["chunk_idx", "chunk"], "left_anti")
-    a = chunks.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), "chunk_idx", "chunk"
-    )
-    b = chunks.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"), "chunk_idx", "chunk"
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    # the Hamming verify runs map-side BEFORE the pair-dedup groupBy:
-    # a candidate pair appears once per agreeing chunk (up to n_chunks
+    # The Hamming verify runs map-side BEFORE the pair dedup: a
+    # candidate pair appears once per agreeing chunk (up to n_chunks
     # copies), so filtering first shrinks the dedup shuffle from the
     # full chunk-collision volume to the true near-dup set (measured
-    # 5.1M -> ~54k rows at sf0.1, 6.1s -> ~1.5s)
-    cand = (
-        a.join(b, ["chunk_idx", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming.alias("__h"))
-        .where(F.col("__h") <= max_hamming)
+    # 5.1M -> ~54k rows at sf0.1, 6.1s -> ~1.5s).
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    out = (
+        bucket_pairs(
+            chunks, ["chunk_idx", "chunk"], id_col, max_bucket_size, carry=("simhash",)
+        )
+        .select("id_a", "id_b", hamming.alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+        .distinct()
     )
-    if star is not None:
-        cand = cand.unionByName(star.where(F.col("__h") <= max_hamming))
-    out = cand.groupBy("id_a", "id_b").agg(F.first("__h").alias("hamming"))
     return register_cached(out, sig)
 
 

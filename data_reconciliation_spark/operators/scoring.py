@@ -133,16 +133,6 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
     return attach_simhash64_md5(prepared, "norm_text", "simhash")
 
 
-def _native_jaccard(a, b):
-    """Token-set Jaccard from raw text columns (fallback when the
-    precomputed ``tok_hashes`` payload is absent)."""
-    ta = F.array_distinct(F.split(a, " "))
-    tb = F.array_distinct(F.split(b, " "))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter.cast("double") / union)
-
-
 def _hashed_jaccard():
     """Jaccard over precomputed token-hash arrays: ONE array_intersect
     on plain attributes; |union| = |A|+|B|-|inter| so no union array is
@@ -165,8 +155,7 @@ def _hashed_jaccard():
 
 def score_pairs(pairs: DataFrame, cfg: ScoringConfig | None = None) -> DataFrame:
     """Score candidate pairs carrying per-side payload columns
-    ``canon_url_{a,b}, simhash_{a,b}`` plus ``tok_hashes_{a,b}`` (fast
-    path) or ``norm_text_{a,b}`` (fallback), and optionally
+    ``canon_url_{a,b}, tok_hashes_{a,b}, simhash_{a,b}`` and optionally
     ``title_{a,b}``.
 
     Emits features + weighted score + is_match verdict.  Tier-2 native
@@ -186,14 +175,10 @@ def score_pairs(pairs: DataFrame, cfg: ScoringConfig | None = None) -> DataFrame
     # pushed below a Generate whose output they reference, so each
     # feature is evaluated exactly once (pinned by
     # tests/test_properties_and_plans.py plan regression).
-    if "tok_hashes_a" in pairs.columns and "tok_hashes_b" in pairs.columns:
-        jaccard = _hashed_jaccard()
-    else:
-        jaccard = _native_jaccard(F.col("norm_text_a"), F.col("norm_text_b"))
     feat = F.explode(
         F.array(
             F.struct(
-                jaccard.alias("token_jaccard"),
+                _hashed_jaccard().alias("token_jaccard"),
                 F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
                 .cast("int")
                 .alias("simhash_hamming"),
@@ -303,7 +288,6 @@ def block_score_pipeline(
         prep.select("url", F.col("norm_text").alias("text")),
         blocking_cfg,
         id_col="url",
-        payload_cols=(),
         keep_hashed_ids=blocking_cfg.dictionary_ids,
     )
     # Payload joins double as the id-recovery step: with dictionary ids
@@ -363,7 +347,6 @@ def block_score_pipeline(
                 F.when(flip, F.col(f"{c}_a")).otherwise(F.col(f"{c}_b")).alias(f"{c}_b")
                 for c in sides
             ],
-            *[c for c in pairs.columns if not c.endswith(("_a", "_b"))],
         )
         if collect_fanout:
             pairs = pairs.observe(obs_post, F.count(F.lit(1)).alias("n"))
@@ -386,13 +369,12 @@ def block_score_pipeline(
     # write and every downstream scan (guide §2.3 "shuffle fewer
     # bytes"; same reasoning as prepare_pages dropping raw text).  The
     # features themselves (token_jaccard, simhash_hamming, url_jw,
-    # title_jw, score, is_match) plus real ids and block_key all stay.
+    # title_jw, score, is_match) plus the real ids all stay.
     scored = score_pairs(pairs, scoring_cfg).drop(
         "tok_hashes_a", "tok_hashes_b",
         "canon_url_a", "canon_url_b",
         "title_a", "title_b",
         "simhash_a", "simhash_b",
-        "norm_text_a", "norm_text_b",
     )
     # the prep cache plus the block-table cache candidate_pairs
     # registered are handed to the caller for release (lifecycle

@@ -52,9 +52,8 @@ def test_extraction_byte_identical(pages):
 def test_blocking_recall(pages):
     """Every intra-entity pair must be a candidate (they share the host
     key at minimum)."""
-    cands = candidate_pairs(pages, BlockingConfig(), payload_cols=()).select(
-        "id_a", "id_b"
-    )
+    cands = candidate_pairs(pages, BlockingConfig())
+    assert cands.columns == ["id_a", "id_b"]
     truth = (
         pages.alias("a")
         .join(pages.alias("b"), F.col("a.entity_id") == F.col("b.entity_id"))
@@ -391,7 +390,7 @@ def test_scored_pairs_drop_scoring_inputs(spark, pages):
     scored = scoring.block_score_pipeline(pages, collect_fanout=False)
     cols = set(scored.columns)
     for c in ("tok_hashes_a", "tok_hashes_b", "canon_url_a", "canon_url_b",
-              "title_a", "title_b", "simhash_a", "simhash_b"):
+              "title_a", "title_b", "simhash_a", "simhash_b", "block_key"):
         assert c not in cols, c
     for c in ("url_a", "url_b", "token_jaccard", "simhash_hamming",
               "url_jw", "title_jw", "score", "is_match"):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -158,6 +159,66 @@ def test_minhash_band_join_carries_ids_only(spark):
     assert "band_key" in p
 
 
+# bucket_pairs: rows (k1, k2, id) from small ranges, so ids repeat
+# across buckets and (bucket, id) rows repeat.  Every table also holds
+# one bucket of exactly 50 and one of 51 distinct ids, on either side
+# of the 50 cap.
+_BUCKET_ROWS = st.lists(
+    st.tuples(st.integers(0, 3), st.integers(0, 1), st.integers(0, 7)), max_size=30
+)
+_EDGE_ROWS = [(8, 0, 100 + i) for i in range(50)] + [(9, 0, 200 + i) for i in range(51)]
+
+
+def _carry_of(i: int) -> int:
+    return i * 7 % 11
+
+
+def _bucket_pairs_oracle(rows, n_keys, cap, carry):
+    from collections import Counter, defaultdict
+
+    buckets = defaultdict(list)
+    for r in rows:
+        buckets[r[:n_keys]].append(r[2])
+    out = Counter()
+    for ids in buckets.values():
+        if cap is not None and len(ids) > cap:
+            rep = min(ids)
+            pairs = [(rep, i) for i in ids if i > rep]
+        else:
+            pairs = [(a, b) for a in ids for b in ids if a < b]
+        for a, b in pairs:
+            out[(a, b, _carry_of(a), _carry_of(b)) if carry else (a, b)] += 1
+    return out
+
+
+# each cap once, and each (key count, carry) combination once
+@pytest.mark.parametrize(
+    "cap,n_keys,carry", [(None, 1, False), (1, 2, True), (2, 1, True), (50, 2, False)]
+)
+@settings(max_examples=2, deadline=None)
+@given(rows=_BUCKET_ROWS)
+def test_bucket_pairs_matches_oracle(spark, cap, n_keys, carry, rows):
+    """``blocking.bucket_pairs`` returns exactly the oracle's multiset of
+    rows: every two rows of a bucket (id_a < id_b, one row per shared
+    bucket, no dedup) for buckets of at most ``max_size`` members, and
+    for larger buckets each member paired with the bucket's min id, the
+    star carrying its own ``carry`` value."""
+    from collections import Counter
+
+    from data_reconciliation_spark.operators.blocking import bucket_pairs
+
+    rows = rows + _EDGE_ROWS
+    df = spark.createDataFrame(
+        [(k1, k2, i, _carry_of(i)) for k1, k2, i in rows], "k1 int, k2 int, id long, c long"
+    )
+    cols = ["id_a", "id_b", "c_a", "c_b"] if carry else ["id_a", "id_b"]
+    got = bucket_pairs(df, ["k1", "k2"][:n_keys], "id", cap, carry=("c",) if carry else ())
+    assert got.columns == cols
+    assert Counter(tuple(r) for r in got.collect()) == _bucket_pairs_oracle(
+        rows, n_keys, cap, carry
+    )
+
+
 def test_score_pairs_single_udf_eval_under_filter_pushdown(spark):
     """A downstream ``.where("is_match")`` must NOT duplicate the scoring
     work: without the Generate barriers in score_pairs, Catalyst inlines
@@ -168,9 +229,9 @@ def test_score_pairs_single_udf_eval_under_filter_pushdown(spark):
     from data_reconciliation_spark.operators.scoring import score_pairs
 
     df = spark.createDataFrame(
-        [("a", "b", "x", "y", 1, 2)],
-        "canon_url_a string, canon_url_b string, norm_text_a string, "
-        "norm_text_b string, simhash_a long, simhash_b long",
+        [("a", "b", [1, 2], [2, 3], 1, 2)],
+        "canon_url_a string, canon_url_b string, tok_hashes_a array<int>, "
+        "tok_hashes_b array<int>, simhash_a long, simhash_b long",
     )
     plan = score_pairs(df).where("is_match")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
