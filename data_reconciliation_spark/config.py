@@ -12,6 +12,7 @@ dataclass consumed at *plan-build time* — rule dispatch (reference
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 
 VALID_TYPES = {"string", "decimal", "integer", "date", "ignore", None}
@@ -178,11 +179,12 @@ class BlockingConfig:
     # inside oversized host blocks — a hot host with millions of pages is
     # a useless *blocking* signal anyway.
     max_block_size: int | None = 500
-    # Shuffle 8-byte xxhash ids through the block self-join instead of
-    # raw id strings (the widest exchange of the pipeline); real ids are
-    # joined back from a compact mapping afterwards.  Hash collisions can
-    # only add candidates (verified by scoring), never drop true pairs.
-    dictionary_ids: bool = True
+    # 8-byte xxhash ids, not raw id strings, always go through the block
+    # self-join (the widest exchange of the pipeline); real ids are
+    # joined back afterwards.  Hash collisions can only add candidates
+    # (verified by scoring), never drop true pairs.  One id path, so a
+    # class constant, not a field; callers may still read it.
+    dictionary_ids: ClassVar[bool] = True
 
     @property
     def rows_per_band(self) -> int:

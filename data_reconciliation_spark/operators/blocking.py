@@ -75,11 +75,11 @@ _LONG_MAX = (1 << 63) - 1
 
 
 def dictionary_uid(col: Column) -> Column:
-    """The 8-byte dictionary id used for wide shuffles when
-    ``cfg.dictionary_ids`` is on: ``xxhash64(id)``.  One definition so
-    the block table, the payload joins (scoring), and the collision
-    telemetry all derive ids identically — and so tests can substitute
-    a deliberately coarse hash to force collisions."""
+    """The 8-byte dictionary id every wide pair shuffle carries:
+    ``xxhash64(id)``.  One definition so the block table, the payload
+    joins (scoring), and the collision telemetry all derive ids
+    identically — and so tests can substitute a deliberately coarse
+    hash to force collisions."""
     return F.xxhash64(col)
 
 
@@ -364,15 +364,14 @@ def candidate_pairs(
     inside such blocks still generate content-similar candidates because
     band keys partition by *content*, not host.
 
-    ``keep_hashed_ids`` (with ``cfg.dictionary_ids``): skip the two
-    mapping joins that translate the 8-byte dictionary ids back to real
-    ids — the caller joins its per-id payload keyed by
-    ``xxhash64(id)`` instead and recovers the real id from the payload
-    row, saving two passes over the pair table.  Pair ordering
-    ``id_a < id_b`` is then on the hash domain.  An xxhash64 birthday
-    collision double-attaches a payload (a duplicated candidate pair —
-    scored identically, harmless to closure) rather than losing
-    anything.
+    ``keep_hashed_ids``: skip the two mapping joins that translate the
+    8-byte dictionary ids back to real ids — the caller joins its
+    per-id payload keyed by ``xxhash64(id)`` instead and recovers the
+    real id from the payload row, saving two passes over the pair
+    table.  Pair ordering ``id_a < id_b`` is then on the hash domain.
+    An xxhash64 birthday collision double-attaches a payload (a
+    duplicated candidate pair — scored identically, harmless to
+    closure) rather than losing anything.
     """
     cfg = cfg or BlockingConfig()
     keyed = with_blocking_keys(pages, cfg)
@@ -385,12 +384,10 @@ def candidate_pairs(
     # scoring) or merge two blocks — never lose a true pair beyond the
     # band-probability already accepted.  Final outputs carry real ids
     # (joined back from the compact mapping table).
-    if cfg.dictionary_ids:
-        uid = dictionary_uid(F.col(id_col))
-        mapping = pages.select(uid.alias("__uid"), F.col(id_col)).distinct()
-        blocks = blocks.select(
-            F.xxhash64("block_key").alias("block_key"), uid.alias(id_col)
-        )
+    uid = dictionary_uid(F.col(id_col))
+    blocks = blocks.select(
+        F.xxhash64("block_key").alias("block_key"), uid.alias(id_col)
+    )
 
     # Materialize the block table, salted so no single partition owns
     # a hot host: bucket_pairs consumes it several times, and the
@@ -406,10 +403,11 @@ def candidate_pairs(
         blocks, "block_key", salt_buckets=16, id_col=id_col
     ).persist(StorageLevel.MEMORY_AND_DISK)
     pairs = bucket_pairs(blocks, ["block_key"], id_col, cfg.max_block_size).distinct()
-    if cfg.dictionary_ids and not keep_hashed_ids:
+    if not keep_hashed_ids:
         # map compact uids back to real ids and re-orient so
         # id_a < id_b holds on the REAL id domain (the dedup ordering
         # above was on hashes).
+        mapping = pages.select(uid.alias("__uid"), F.col(id_col)).distinct()
         ma = mapping.select(F.col("__uid").alias("id_a"), F.col(id_col).alias("__ra"))
         mb = mapping.select(F.col("__uid").alias("id_b"), F.col(id_col).alias("__rb"))
         pairs = (

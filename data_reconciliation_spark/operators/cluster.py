@@ -35,20 +35,14 @@ Design notes for 10^12-node scale:
   10^12-node graph *never* drops under the threshold and runs the
   fully-distributed loop throughout.  ``local_finish_threshold=0``
   forces the distributed path (used by tests and the scale profile).
-* **Conf isolation**: the latency-regime tuning (AQE off + small fixed
-  shuffle partitioning for sub-second rounds) runs in a *cloned
-  SparkSession* (``SparkSession.newSession`` — own SQLConf, shared
-  SparkContext), never by mutating the caller's session conf, so
-  concurrent queries on a shared long-running driver are planned
-  untouched (round-4 ADVICE).  Plans cross sessions via
-  ``Dataset.ofRows`` on self-contained subtrees (checkpointed RDD
-  scans), and the final labels plan is re-bound to the caller's
-  session so downstream composition plans under the caller's conf.
+  The driver finish is the closure's one small-graph mechanism: the
+  distributed rounds plan under the input's session conf, which the
+  closure neither reads nor changes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_reconciliation_spark.sources.state import CheckpointManager
@@ -92,40 +86,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
         neighbor_edges.unionAll(center_edges)
         .where(F.col("src") != F.col("dst"))
         .distinct()
-    )
-
-
-def _rebind(df: DataFrame, session: SparkSession) -> DataFrame:
-    """Re-bind ``df``'s analyzed plan to another session sharing the
-    same SparkContext (``Dataset.ofRows``).  Valid for self-contained
-    plans (no temp-view references) — everything here is checkpointed
-    RDD scans plus joins/aggregations built on them."""
-    jvm = session._jvm
-    plan = df._jdf.queryExecution().analyzed()
-    try:  # Spark 4.x
-        jds = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            session._jsparkSession, plan
-        )
-    except Exception:  # pragma: no cover — Spark 3.x fallback
-        jds = jvm.org.apache.spark.sql.Dataset.ofRows(session._jsparkSession, plan)
-    return DataFrame(jds, session)
-
-
-def _coerce_partitions(raw: object, fallback: int) -> int:
-    """'auto' (allowed by some Spark distributions) or any non-numeric
-    value falls back instead of raising (round-4 ADVICE)."""
-    try:
-        return int(raw)  # type: ignore[arg-type]
-    except (TypeError, ValueError):
-        return fallback
-
-
-def _parse_partitions(spark: SparkSession) -> int:
-    """Session shuffle partitions as an int; non-numeric values fall
-    back to the context default parallelism."""
-    return _coerce_partitions(
-        spark.conf.get("spark.sql.shuffle.partitions", "200"),
-        spark.sparkContext.defaultParallelism,
     )
 
 
@@ -195,8 +155,6 @@ def _local_union_find(e: DataFrame) -> DataFrame:
         if np.array_equal(parent, before):
             break
 
-    import pandas as pd
-
     return spark.createDataFrame(
         pd.DataFrame({"node": nodes, "component": nodes[parent]}),
         schema=out_schema,
@@ -251,10 +209,9 @@ def connected_components(
 
     ``on_round`` (optional): callback ``(iteration, n_edges, seconds)``
     invoked after each distributed round — used by
-    ``tools/profile_closure_scaling.py`` to measure the per-round
-    latency-vs-data-bound regime crossover.
+    ``tools/profile_closure_scaling.py`` and the benchmark's traced pass
+    to count and time the rounds.
     """
-    caller = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col("src") != F.col("dst")
     )
@@ -327,56 +284,18 @@ def connected_components(
 
     # initial materialization folds the first fingerprint into the same
     # job (observe) — one job instead of checkpoint + separate agg.
-    # This runs under the CALLER's conf: the raw edge set is the
-    # data-bound part and should get the session's AQE treatment.
     e, fp_prev, avg_bytes = _checkpoint_with_fingerprint(e)
 
     if _fits_local(fp_prev[0], avg_bytes):
         return _local_union_find(e)
 
-    # Distributed regime.  The loop is LATENCY-bound once the edge set
-    # is small: each round is one tiny job and the total cost is rounds
-    # x (stage scheduling + AQE re-planning), not data.  Measured on
-    # the 100k-node chain fixture (6 rounds, local[32]): AQE on + 32
-    # shuffle partitions = 12.6s; AQE off + 8 partitions = 6.7s; AQE
-    # off + 32 partitions = 20.3s (task-launch overhead) — so BOTH
-    # knobs must move together.  The regime is chosen per round from
-    # the OBSERVED edge count of the previous round: small edge sets
-    # get fixed small partitioning with AQE off; large ones keep the
-    # caller's AQE + partitioning (data-bound regime, where AQE's
-    # coalescing/skew-splitting is the right tool).  A shrinking
-    # closure naturally migrates between regimes as components
-    # contract.  All of this happens in an ISOLATED cloned session so
-    # the caller's conf is never touched (round-4 ADVICE).
     # (Fusing two rounds per materialization was also measured — 19.1s
     # vs 14-15s unfused — Catalyst recomputes the first round's subtree
     # for each of the second round's consumers, so fusing loses.)
-    sess_parts = _parse_partitions(caller)
-    sess_aqe = caller.conf.get("spark.sql.adaptive.enabled", "true")
-    iso = caller.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-    iso.conf.set("spark.sql.adaptive.enabled", sess_aqe)
-    e = _rebind(e, iso)
-
-    LATENCY_REGIME_EDGES = 2_000_000
-    ROWS_PER_PARTITION = 12_000
-
-    def _regime_parts(n_edges: int) -> int:
-        return max(4, min(sess_parts, n_edges // ROWS_PER_PARTITION + 1))
-
-    def _tune(n_edges: int) -> None:
-        if n_edges < LATENCY_REGIME_EDGES:
-            iso.conf.set("spark.sql.adaptive.enabled", "false")
-            iso.conf.set("spark.sql.shuffle.partitions", str(_regime_parts(n_edges)))
-        else:
-            iso.conf.set("spark.sql.adaptive.enabled", sess_aqe)
-            iso.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-
     import time as _time
 
     converged = False
     for it in range(start_iter, max_iter):
-        _tune(fp_prev[0])
         _round_t0 = _time.time()
         new_e, fp_new, avg_bytes = _checkpoint_with_fingerprint(
             _small_star(_large_star(e, dedup=False))
@@ -398,30 +317,17 @@ def connected_components(
             break
         if _fits_local(fp_prev[0], avg_bytes):
             # contracted under the driver budget mid-loop: finish there
-            return _local_union_find(_rebind(e, caller))
+            return _local_union_find(e)
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
 
-    # stars: (v -> m) edges + centers' self-labels.  The explicit
-    # repartition pins the final aggregation's single shuffle to the
-    # regime-appropriate partition count even under the caller's AQE
-    # (user-specified repartition counts are not coalesced), and hash
-    # partitioning on `node` satisfies the groupBy's clustering
-    # requirement, so no second exchange is added.
-    n_final = fp_prev[0]
-    parts = (
-        _regime_parts(n_final) if n_final < LATENCY_REGIME_EDGES else sess_parts
-    )
+    # stars: (v -> m) edges + centers' self-labels
     labels = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     centers = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
-    out = (
+    return (
         labels.unionAll(centers)
-        .repartition(parts, "node")
         .groupBy("node")
         .agg(F.min("component").alias("component"))
     )
-    # hand the result back on the caller's session so downstream
-    # composition plans under the caller's conf, not the iso regime
-    return _rebind(out, caller)

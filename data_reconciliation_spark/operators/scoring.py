@@ -288,11 +288,11 @@ def block_score_pipeline(
         prep.select("url", F.col("norm_text").alias("text")),
         blocking_cfg,
         id_col="url",
-        keep_hashed_ids=blocking_cfg.dictionary_ids,
+        keep_hashed_ids=True,
     )
-    # Payload joins double as the id-recovery step: with dictionary ids
-    # the pair table carries 8-byte xxhash64(url) keys, and the payload
-    # side is keyed by the same hash while CARRYING the real url — one
+    # Payload joins double as the id-recovery step: the pair table
+    # carries 8-byte xxhash64(url) keys, and the payload side is keyed
+    # by the same hash while CARRYING the real url — one
     # (broadcast-sized) join per side instead of separate mapping joins
     # + payload joins (two fewer passes over the wide pair table).
     def payload(suffix: str):
@@ -304,63 +304,51 @@ def block_score_pipeline(
             F.col("simhash").alias(f"simhash_{suffix}"),
         ]
 
-    if blocking_cfg.dictionary_ids:
-        # Collision telemetry (an xxhash64 id collision fans one hash
-        # pair into a scored row per colliding payload combination —
-        # documented bounded degradation): count the pair table before
-        # and after the payload joins in the SAME materialization via
-        # observe(); fan-out = post - pre.  Zero extra jobs — consumers
-        # read it with ``pair_fanout(scored)`` after materializing, so
-        # a real corpus verifies the 2^-64 assumption instead of
-        # trusting it.  Only built when a consumer asked
-        # (``collect_fanout``) — see the docstring.
-        from pyspark.sql import Observation
+    # Collision telemetry (an xxhash64 id collision fans one hash
+    # pair into a scored row per colliding payload combination —
+    # documented bounded degradation): count the pair table before
+    # and after the payload joins in the SAME materialization via
+    # observe(); fan-out = post - pre.  Zero extra jobs — consumers
+    # read it with ``pair_fanout(scored)`` after materializing, so
+    # a real corpus verifies the 2^-64 assumption instead of
+    # trusting it.  Only built when a consumer asked
+    # (``collect_fanout``) — see the docstring.
+    from pyspark.sql import Observation
 
-        cand_deps = cached_deps(cand)  # observe() returns a new object
-        if collect_fanout:
-            obs_pre, obs_post = Observation(), Observation()
-            cand = cand.observe(obs_pre, F.count(F.lit(1)).alias("n"))
-        pa = prep.select(
-            _blocking.dictionary_uid(F.col("url")).alias("id_a"), *payload("a")
-        )
-        pb = prep.select(
-            _blocking.dictionary_uid(F.col("url")).alias("id_b"), *payload("b")
-        )
-        pairs = cand.join(pa, "id_a").join(pb, "id_b").drop("id_a", "id_b")
-        # candidate_pairs guarantees id_a < id_b only on the HASH
-        # domain; re-orient on the recovered real ids so the scored
-        # output upholds url_a < url_b like the string-id path (round-4
-        # ADVICE — consumers and unions canonicalize by real-id order).
-        # All scoring features are symmetric, so swapping sides before
-        # score_pairs cannot change any verdict.  (An xxhash64 collision
-        # fans a pair out into one row per colliding payload — each
-        # still scored independently, a bounded-degradation, not a
-        # correctness, concern.)
-        flip = F.col("url_a") > F.col("url_b")
-        sides = ["url", "canon_url", "title", "tok_hashes", "simhash"]
-        pairs = pairs.select(
-            *[
-                F.when(flip, F.col(f"{c}_b")).otherwise(F.col(f"{c}_a")).alias(f"{c}_a")
-                for c in sides
-            ],
-            *[
-                F.when(flip, F.col(f"{c}_a")).otherwise(F.col(f"{c}_b")).alias(f"{c}_b")
-                for c in sides
-            ],
-        )
-        if collect_fanout:
-            pairs = pairs.observe(obs_post, F.count(F.lit(1)).alias("n"))
-            fanout_obs = (obs_pre, obs_post)
-        else:
-            fanout_obs = None
-    else:
-        cand_deps = cached_deps(cand)
-        fanout_obs = None
-        pairs = (
-            cand.withColumnsRenamed({"id_a": "url_a", "id_b": "url_b"})
-            .join(prep.select(*payload("a")), "url_a")
-            .join(prep.select(*payload("b")), "url_b")
-        )
+    cand_deps = cached_deps(cand)  # observe() returns a new object
+    if collect_fanout:
+        obs_pre, obs_post = Observation(), Observation()
+        cand = cand.observe(obs_pre, F.count(F.lit(1)).alias("n"))
+    pa = prep.select(
+        _blocking.dictionary_uid(F.col("url")).alias("id_a"), *payload("a")
+    )
+    pb = prep.select(
+        _blocking.dictionary_uid(F.col("url")).alias("id_b"), *payload("b")
+    )
+    pairs = cand.join(pa, "id_a").join(pb, "id_b").drop("id_a", "id_b")
+    # candidate_pairs guarantees id_a < id_b only on the HASH
+    # domain; re-orient on the recovered real ids so the scored
+    # output upholds url_a < url_b (round-4 ADVICE — consumers and
+    # unions canonicalize by real-id order).
+    # All scoring features are symmetric, so swapping sides before
+    # score_pairs cannot change any verdict.  (An xxhash64 collision
+    # fans a pair out into one row per colliding payload — each
+    # still scored independently, a bounded-degradation, not a
+    # correctness, concern.)
+    flip = F.col("url_a") > F.col("url_b")
+    sides = ["url", "canon_url", "title", "tok_hashes", "simhash"]
+    pairs = pairs.select(
+        *[
+            F.when(flip, F.col(f"{c}_b")).otherwise(F.col(f"{c}_a")).alias(f"{c}_a")
+            for c in sides
+        ],
+        *[
+            F.when(flip, F.col(f"{c}_a")).otherwise(F.col(f"{c}_b")).alias(f"{c}_b")
+            for c in sides
+        ],
+    )
+    if collect_fanout:
+        pairs = pairs.observe(obs_post, F.count(F.lit(1)).alias("n"))
     # Drop the per-side scoring INPUTS (token-hash arrays, canonical
     # urls, titles, simhashes) once the features are computed: they are
     # the fat majority of the pair row (~2x40 int hashes + 2 urls + 2
@@ -380,8 +368,8 @@ def block_score_pipeline(
     # registered are handed to the caller for release (lifecycle
     # contract); link() folds them into LinkResult.release()
     scored = register_cached(scored, prep, *cand_deps)
-    if fanout_obs is not None:
-        scored._pair_fanout_obs = fanout_obs
+    if collect_fanout:
+        scored._pair_fanout_obs = (obs_pre, obs_post)
     return scored
 
 
@@ -392,8 +380,8 @@ def pair_fanout(scored: DataFrame) -> int | None:
     materialization.  0 means no xxhash64 id collision touched this
     corpus; > 0 counts the extra scored rows collisions fanned out.
 
-    Returns None when ``scored`` carries no observations (string-id
-    path, ``collect_fanout=False``, or a DataFrame derived from the
+    Returns None when ``scored`` carries no observations
+    (``collect_fanout=False``, or a DataFrame derived from the
     registered one) OR when the plan has not been materialized yet —
     read via the non-blocking ``getOrEmpty`` (the blocking
     ``Observation.get`` would deadlock a caller that forgot to run an

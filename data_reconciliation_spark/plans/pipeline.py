@@ -9,11 +9,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_reconciliation_spark.config import BlockingConfig, ScoringConfig
-from data_reconciliation_spark.operators.cluster import _rebind, connected_components
+from data_reconciliation_spark.operators.cluster import connected_components
 from data_reconciliation_spark.operators.scoring import block_score_pipeline
 from data_reconciliation_spark.sources.state import CheckpointManager
 
@@ -25,9 +25,25 @@ from data_reconciliation_spark.sources.state import CheckpointManager
 # (tools/e2e_variant_probe.py).  At warehouse volumes (> ~2M pages) the
 # stages run for minutes and AQE's runtime coalescing / skew splitting
 # is worth far more than its planning overhead, so the caller's AQE
-# setting stays in force — same crossover logic, same threshold order,
-# as the closure loop's LATENCY_REGIME_EDGES (operators/cluster.py).
+# setting stays in force.  The closure needs no such threshold: graphs
+# small enough to be latency-bound finish on the driver
+# (operators/cluster.py).
 LATENCY_REGIME_PAGES = 2_000_000
+
+
+def _rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """Re-bind ``df``'s analyzed plan to another session sharing the
+    same SparkContext (``Dataset.ofRows``).  Valid for self-contained
+    plans (no temp-view references)."""
+    jvm = session._jvm
+    plan = df._jdf.queryExecution().analyzed()
+    try:  # Spark 4.x
+        jds = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            session._jsparkSession, plan
+        )
+    except Exception:  # pragma: no cover — Spark 3.x fallback
+        jds = jvm.org.apache.spark.sql.Dataset.ofRows(session._jsparkSession, plan)
+    return DataFrame(jds, session)
 
 
 @dataclass
@@ -56,7 +72,6 @@ def link(
     scoring_cfg: ScoringConfig | None = None,
     checkpoint: CheckpointManager | None = None,
     max_iter: int = 30,
-    latency_regime: bool | None = None,
 ) -> LinkResult:
     """Resolve a page table into entity clusters.
 
@@ -64,30 +79,23 @@ def link(
     it feeds both the match-edge extraction and downstream metrics; the
     closure loop itself checkpoints per round when a manager is given.
 
-    ``latency_regime``: None (default) auto-detects by row count —
-    inputs at or under :data:`LATENCY_REGIME_PAGES` plan the whole
-    pipeline with AQE off inside a CLONED session (``newSession`` —
-    own SQLConf, shared SparkContext and cache manager), because at
-    that size per-stage planning/scheduling dominates wall time; the
-    caller's session conf is never touched, and every returned
-    DataFrame is re-bound to the caller's session so downstream
-    composition plans under the caller's conf (the same isolation
-    discipline as the closure loop's regime tuning).  Pass True/False
-    to skip the auto-detect count (it is one cheap job on a cached or
-    parquet input, but a caller whose ``pages`` is an expensive
-    uncached computation should decide explicitly).
+    When the caller's session has AQE on, inputs of at most
+    :data:`LATENCY_REGIME_PAGES` rows (one count job decides) plan the
+    whole pipeline with AQE off inside a CLONED session
+    (``newSession`` — own SQLConf, shared SparkContext and cache
+    manager), because at that size per-stage planning/scheduling
+    dominates wall time.  The caller's session conf is never touched,
+    and every returned DataFrame is re-bound to the caller's session so
+    downstream composition plans under the caller's conf.
     """
     from pyspark.storagelevel import StorageLevel
 
     caller = pages.sparkSession
-    if latency_regime is None:
-        latency_regime = pages.count() <= LATENCY_REGIME_PAGES
     caller_aqe = caller.conf.get("spark.sql.adaptive.enabled", "true")
-    if latency_regime and caller_aqe == "true":
+    if caller_aqe == "true" and pages.count() <= LATENCY_REGIME_PAGES:
         iso = caller.newSession()
         # runtime conf.set() values do not propagate through newSession;
-        # pin the two planning knobs the pipeline depends on (same keys
-        # the closure loop copies)
+        # pin the two planning knobs the pipeline depends on
         iso.conf.set(
             "spark.sql.shuffle.partitions",
             caller.conf.get("spark.sql.shuffle.partitions", "200"),

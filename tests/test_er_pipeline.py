@@ -322,10 +322,10 @@ def test_pair_fanout_collision_telemetry(spark, pages, monkeypatch):
 
 
 def test_closure_conf_isolation(spark):
-    """The distributed loop's latency-regime tuning (AQE off + small
-    shuffle partitioning) must run in a cloned session: the caller's
-    conf is never mutated, even mid-loop (round-4 ADVICE — a shared
-    long-running driver plans concurrent queries under session conf)."""
+    """The distributed loop plans under its input's session and must
+    never mutate that session's conf, even mid-loop (round-4 ADVICE — a
+    shared long-running driver plans concurrent queries under session
+    conf); its result stays bound to that session."""
     before = {
         k: spark.conf.get(k)
         for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
@@ -335,27 +335,48 @@ def test_closure_conf_isolation(spark):
     connected_components(df, local_finish_threshold=0).count()
     after = {k: spark.conf.get(k) for k in before}
     assert after == before
-    # result DataFrames are handed back bound to the caller's session,
-    # so downstream composition plans under the caller's conf
+    # the result is bound to the caller's session, so downstream
+    # composition plans under the caller's conf
     out = connected_components(df, local_finish_threshold=0)
     assert out.sparkSession is spark
 
 
-def test_parse_partitions_auto_fallback(spark):
-    """'auto' (allowed on some Spark distributions; OSS Spark rejects
-    setting it, so the coercion is tested directly) must fall back to
-    defaultParallelism instead of raising (round-4 ADVICE)."""
-    from data_reconciliation_spark.operators.cluster import (
-        _coerce_partitions,
-        _parse_partitions,
-    )
+def test_closure_and_link_knob_invariance(spark, pages):
+    """Labels must not depend on the engine's knobs: connected_components
+    equals networkx under session AQE on/off x shuffle partitions 1/7,
+    on both the driver finish and the distributed loop, and link()
+    labels are identical with the session's AQE on (planned in its
+    AQE-off clone) and off.  Unpadded string ids make the rank order
+    non-monotone along paths."""
+    import random
 
-    assert _coerce_partitions("auto", 16) == 16
-    assert _coerce_partitions(None, 16) == 16
-    assert _coerce_partitions("32", 16) == 32
-    assert _parse_partitions(spark) == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    import networkx as nx
+
+    rng = random.Random(7)
+    edges = [(f"n{rng.randrange(150)}", f"n{rng.randrange(150)}") for _ in range(70)]
+    edges = [(a, b) for a, b in edges if a != b]
+    want = {n: min(c) for c in nx.connected_components(nx.Graph(edges)) for n in c}
+    df = spark.createDataFrame(edges, "src string, dst string")
+
+    aqe_key, parts_key = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+    before = {k: spark.conf.get(k) for k in (aqe_key, parts_key)}
+    entities = {}
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set(aqe_key, aqe)
+            for parts in (1, 7):
+                spark.conf.set(parts_key, str(parts))
+                for threshold in (2_000_000, 0):
+                    cc = connected_components(df, local_finish_threshold=threshold)
+                    assert dict(cc.collect()) == want, (aqe, parts, threshold)
+            spark.conf.set(parts_key, before[parts_key])
+            res = link(pages)
+            entities[aqe] = sorted(res.clusters.collect())
+            res.release()
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert entities["true"] == entities["false"]
 
 
 def test_fanout_observes_gated_off_without_consumer(spark, pages):
@@ -429,8 +450,7 @@ def test_observation_count_failure_modes(spark):
 def test_link_latency_regime_conf_isolation(spark, pages):
     """link()'s latency-regime AQE tuning must run in a cloned session:
     the caller's conf is untouched and every returned DataFrame is
-    re-bound to the caller's session (same discipline as the closure
-    loop's regime tuning)."""
+    re-bound to the caller's session."""
     before = {
         k: spark.conf.get(k)
         for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")

@@ -14,7 +14,11 @@ basis for the e2e-scaling paragraph.
 
 Writes ``BENCH/closure_profile.json`` and rewrites the marked
 CLOSURE-PROFILE block in ``docs/SCALE.md`` (machine-written, like the
-scaling and headline claims).
+scaling and headline claims).  The block now in ``docs/SCALE.md``
+predates the deletion of the loop's per-round AQE/partition tuning:
+it was measured with rounds under ~2M edges planned AQE off at a
+count-sized partition count; a re-run measures rounds under the
+session's own conf.
 """
 
 from __future__ import annotations
