@@ -49,7 +49,7 @@ spark = build_session(app_name=f"recon-scaling-{cores}",
                           # this heap, so every batch was a humongous
                           # allocation — observed to fragment the heap
                           # into a mid-pass full-GC storm (113s of STW
-                          # in one 212s pass, tools/diag_scaling_cpu.py)
+                          # in one 212s pass, tools/diag_scaling_cpu.py as of 0b4e943)
                           "spark.driver.extraJavaOptions":
                               "-XX:+UseG1GC -Xms32g -XX:+AlwaysPreTouch "
                               "-XX:G1HeapRegionSize=32m",
@@ -57,7 +57,7 @@ spark = build_session(app_name=f"recon-scaling-{cores}",
                           # so large Arrow batches are safe and amortize
                           # the numpy-vectorized kernels: measured 2x on
                           # the 32-core leg vs the 10k default
-                          # (tools/profile_udf_decay.py)
+                          # (tools/profile_udf_decay.py as of 0b4e943)
                           "spark.sql.execution.arrow.maxRecordsPerBatch": "50000",
                           # the timed stage scans the written pair table:
                           # ~9 MB parquet files must not be bin-packed
@@ -134,7 +134,7 @@ n_pairs = pairs.count()
 # --- timed: score every candidate pair.  Passes 0-1 are warmup:
 # whole-stage-codegen + C2 JIT compilation measured to need TWO passes
 # to settle at local[32] (first two passes burn 2-5x the steady-state
-# JVM CPU; tools/profile_full_stage.py).  Later passes are steady-state
+# JVM CPU; tools/profile_full_stage.py as of 0b4e943).  Later passes are steady-state
 # samples; the reported number is the MEDIAN of the first 3 CLEAN
 # passes.  "Clean" is decided by hypervisor CPU-steal measured from
 # /proc/stat around each pass: this sandbox VM suffers bursty
@@ -207,7 +207,7 @@ def _one_pass(warm):
     gc_delta_ms = _gc_ms() - g0
     # GC-anomaly gate, parallel to the steal gate: a sporadic G1 full-GC
     # storm mid-pass (observed: 113s of STW inside one 212s pass,
-    # tools/diag_scaling_cpu.py — a 0.159 pair ratio from one pass)
+    # tools/diag_scaling_cpu.py as of 0b4e943 — a 0.159 pair ratio from one pass)
     # measures heap-fragmentation bad luck, not scoring throughput.
     # Passes burning >10% of wall in STW GC are excluded from the
     # median; like steal exclusions, every pass's gc_ms is recorded so
@@ -791,7 +791,7 @@ gate filters an ENDOGENOUS cost (the workload's own heap behavior,
 unlike steal), so a leg with exclusions on more than half its
 post-warmup passes is marked degraded instead of publishing a
 gate-biased median.  cpu_util near 1.0
-on both legs (tools/diag_scaling_cpu.py) shows the engine keeps every
+on both legs (tools/diag_scaling_cpu.py as of 0b4e943) shows the engine keeps every
 pinned core busy; residual pass-to-pass spread tracks busy cpu-seconds
 for identical work, i.e. per-core memory-bandwidth weather from
 co-tenants, which interleaving cancels in the ratio in expectation.

@@ -166,9 +166,10 @@ class BlockingConfig:
     analog — the reference's only blocking key is the primary key).
 
     Every page is blocked on its normalized-URL host key plus its
-    MinHash-LSH band keys; ``blocking.bucket_pairs`` self-joins the
-    (id, block_key) table, salted against hot hosts.  The MinHash knobs
-    also configure ``dedup.minhash_lsh_pairs``."""
+    ``bands`` MinHash-LSH band keys, all 8-byte hashes;
+    ``blocking.bucket_pairs`` self-joins the (id, block_key) table,
+    salted against hot hosts.  The MinHash knobs also configure
+    ``dedup.minhash_lsh_pairs``, which bands with the same keys."""
 
     num_hashes: int = 64          # MinHash signature length
     bands: int = 16               # LSH bands (rows = num_hashes // bands)

@@ -16,7 +16,10 @@ point; SURVEY.md §2.10).  Pure-Python versions double as the test oracle.
 SimHash has one family and one Spark kernel: the token hash is the first
 16 hex nibbles of md5 (so DuckDB reproduces every signature from
 ``md5()``), and :func:`attach_simhash64_md5` computes it for both ER
-scoring and ``simhash_pairs``.
+scoring and ``simhash_pairs``.  It shares its Arrow batch boundary
+(:func:`_ragged_hashes`) and plan shape (:func:`attach_hash_kernel`)
+with the MinHash kernel, and ER scoring shares the hashed-token
+Jaccard (:func:`hashed_jaccard`) with ``minhash_lsh_pairs``.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -37,6 +41,7 @@ __all__ = [
     "indel_ratio_udf",
     "simhash64_md5_py",
     "attach_simhash64_md5",
+    "hashed_jaccard",
 ]
 
 
@@ -402,6 +407,77 @@ def indel_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
+# Per-document hash kernels (SimHash vote here, MinHash lane-min in
+# ``operators.blocking``): one Arrow batch boundary, one plan shape.
+# ---------------------------------------------------------------------------
+
+def _ragged_hashes(rows, max_len: int | None = None):
+    """A batch of per-document int64 hash arrays as ONE flat uint64
+    array plus per-row offsets, so a kernel reduces the whole batch with
+    one numpy ``reduceat``.
+
+    ``rows`` is what ``Series.to_numpy()`` gives for an ``array<bigint>``
+    column: an int64 array or None per row.  A row is valid when it is
+    non-null, non-empty and, with ``max_len``, at most ``max_len`` long.
+    Returns ``(valid, flat, starts, lens)``: the mask over all rows,
+    then the concatenated hashes, start offsets and lengths of the valid
+    rows only.  What an invalid row yields is the kernel's policy.
+
+    Raises TypeError when a valid row arrives as float: a null list slot
+    in the Arrow batch degrades the whole int64 values buffer to
+    float64, and the integer bits beyond 2^53 are already gone — a loud
+    failure beats silent corruption.
+    """
+    lens = np.fromiter(
+        (0 if r is None else len(r) for r in rows), dtype=np.int64, count=len(rows)
+    )
+    valid = lens > 0
+    if max_len is not None:
+        valid &= lens <= max_len
+    parts = [np.asarray(r) for r, v in zip(rows, valid) if v]
+    if any(p.dtype.kind == "f" for p in parts):
+        raise TypeError(
+            "hash kernel: hash array arrived as float "
+            "(null list slot upstream?) — integer bits lost"
+        )
+    flat = (
+        np.concatenate(parts).astype(np.int64).view(np.uint64)
+        if parts
+        else np.empty(0, dtype=np.uint64)
+    )
+    lens = lens[valid]
+    starts = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    return valid, flat, starts, lens
+
+
+def attach_hash_kernel(df: DataFrame, hashes: Column, kernel, out_col: str) -> DataFrame:
+    """Attach ``kernel(hashes)`` as ``out_col``, where ``hashes`` is a
+    native per-document hash array and ``kernel`` an Arrow pandas UDF
+    over it: the plan shape of both per-document kernels.
+
+    DataFrame-level on purpose — the plan needs two Generate barriers
+    around the Arrow UDF, which a Column-returning API cannot provide:
+
+    1. the native hash array lands in its own projection, then an
+       explode-of-one barrier pins it — without the barrier,
+       CollapseProject inlines the higher-order-function tree into the
+       UDF argument, a shape the Python-UDF extraction rule fails to
+       extract over cached inputs (observed: raw PythonUDF left in an
+       interpreted projection -> INTERNAL_ERROR 'Cannot evaluate
+       expression' at execution);
+    2. the UDF runs over the resulting BARE ATTRIBUTE, and its output passes
+       through a second barrier so downstream repartition / shuffle-
+       partitioner expressions reference the Generate's output attribute
+       and can never inline the Unevaluable PythonUDF expression.
+    """
+    df = df.select("*", hashes.alias("__kh0"))
+    df = df.select("*", F.explode(F.array("__kh0")).alias("__kh")).drop("__kh0")
+    df = df.select("*", kernel(F.col("__kh")).alias("__kout")).drop("__kh")
+    return df.select("*", F.explode(F.array("__kout")).alias(out_col)).drop("__kout")
+
+
+# ---------------------------------------------------------------------------
 # md5-nibble SimHash — exactly reproducible in ANSI SQL (DuckDB), so the
 # driver's oracle can verify it.
 # ---------------------------------------------------------------------------
@@ -438,33 +514,13 @@ def _simhash64_md5_batch(hashes: pd.Series) -> pd.Series:
     """Vectorized md5-nibble SimHash vote: input = per-document array of
     64-bit token hashes (first 16 md5 hex nibbles, computed natively);
     output BIT-EXACT to :func:`simhash64_md5_py` (differential-tested).
-    None for null input or > 16383 tokens: the frozen DuckDB oracle
-    (``SQL_SIMHASH``) returns NULL there, so the kernel must too."""
+    None for null or empty input or > 16383 tokens: the frozen DuckDB
+    oracle (``SQL_SIMHASH``) returns NULL there, so the kernel must too."""
     rows = hashes.to_numpy()
-    n = len(rows)
-    lens = np.fromiter(
-        (0 if r is None else len(r) for r in rows), dtype=np.int64, count=n
-    )
-    valid = np.fromiter((r is not None for r in rows), dtype=bool, count=n)
-    valid &= (lens > 0) & (lens <= 16383)
-    sigs = np.zeros(n, dtype=np.int64)
+    valid, flat, starts, lens = _ragged_hashes(rows, max_len=16383)
+    sigs = np.zeros(len(rows), dtype=np.int64)
     if valid.any():
-        parts = [np.asarray(r) for r, v in zip(rows, valid) if v]
-        for p in parts:
-            if p.dtype.kind == "f":
-                # loud failure beats silent corruption: float means a
-                # null list slot leaked into the Arrow batch and integer
-                # precision beyond 2^53 is already gone
-                raise TypeError(
-                    "simhash64_md5_batch_udf: hash array arrived as float "
-                    "(null list slot upstream?) — integer bits lost"
-                )
-        flat = np.concatenate(parts).astype(np.int64).view(np.uint64)
-        keep = lens[valid]
-        starts = np.zeros(len(keep), dtype=np.int64)
-        if len(keep) > 1:
-            np.cumsum(keep[:-1], out=starts[1:])
-        ones = np.empty((len(keep), 64), dtype=np.int64)
+        ones = np.empty((len(lens), 64), dtype=np.int64)
         # 8 bit-positions at a time keeps the transient bit matrix at
         # T x 8 bytes instead of T x 64
         for g in range(8):
@@ -474,12 +530,12 @@ def _simhash64_md5_batch(hashes: pd.Series) -> pd.Series:
             bits8 = ((flat[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
             np.add.reduceat(bits8, starts, axis=0, dtype=np.int64,
                             out=ones[:, 8 * g: 8 * g + 8])
-        cond = (2 * ones) > keep[:, None]
+        cond = (2 * ones) > lens[:, None]
         packed = np.packbits(cond, axis=1)  # big-endian: col 0 -> bit 63
         sigs[valid] = (
             packed.view(">u8").ravel().astype("=u8").view(np.int64)
         )
-    out = [int(sigs[i]) if valid[i] else None for i in range(n)]
+    out = [int(sigs[i]) if valid[i] else None for i in range(len(rows))]
     # dtype=object is load-bearing: a plain Series of ints-with-None
     # coerces to float64 and silently destroys integer bits beyond 2^53
     return pd.Series(out, index=hashes.index, dtype=object)
@@ -498,9 +554,7 @@ def attach_simhash64_md5(df, text, out_col: str):
     (``scoring.prepare_pages``) and ``dedup.simhash_pairs``.  Per token
     the native side does one md5 + two 8-hex ``conv`` (whole-stage
     codegen), and the 64-lane vote runs vectorized in numpy over the
-    Arrow batch.  Plan shape follows ``blocking.attach_minhash_signature``:
-    UDF over a bare attribute between two explode-of-one Generate
-    barriers.
+    Arrow batch, in the plan shape of :func:`attach_hash_kernel`.
     """
     text = F.col(text) if isinstance(text, str) else text
     toks = F.split(text, " ")
@@ -527,20 +581,32 @@ def attach_simhash64_md5(df, text, out_col: str):
     # with a null).  The kernel maps empty back to None, preserving the
     # native null-text semantics.
     hashed = F.coalesce(F.transform(toks, h64), F.array().cast("array<long>"))
-    df = df.select("*", hashed.alias("__sh_h0"))
-    df = df.select("*", F.explode(F.array("__sh_h0")).alias("__sh_h")).drop("__sh_h0")
-    df = df.select(
-        "*", simhash64_md5_batch_udf(F.col("__sh_h")).alias("__sh_raw")
-    ).drop("__sh_h")
-    return df.select("*", F.explode(F.array("__sh_raw")).alias(out_col)).drop(
-        "__sh_raw"
-    )
+    return attach_hash_kernel(df, hashed, simhash64_md5_batch_udf, out_col)
 
 
 # ---------------------------------------------------------------------------
 # Native (JVM-side) similarity expressions — used where exact rapidfuzz
 # parity is not required, so the plan stays in whole-stage codegen.
 # ---------------------------------------------------------------------------
+
+def hashed_jaccard(a, b) -> Column:
+    """Jaccard of two distinct-hash arrays (token hashes after
+    ``array_distinct``): ONE ``array_intersect``, and |union| =
+    |A|+|B|-|inter| so no union array is ever built.  The intersect size
+    is bound as a lambda variable via a single-element transform so it
+    is evaluated exactly once per pair (a naive when/otherwise would
+    re-run the intersect per reference).  Two empty arrays give 1.0.
+    Used by ER scoring and ``dedup.minhash_lsh_pairs``' verify."""
+    a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
+
+    def jac(inter):
+        union = F.size(a) + F.size(b) - inter
+        return F.when(union == 0, F.lit(1.0)).otherwise(inter.cast("double") / union)
+
+    return F.element_at(
+        F.transform(F.array(F.size(F.array_intersect(a, b))), jac), 1
+    )
+
 
 def levenshtein_similarity(a, b):
     """100 * (1 - levenshtein / max_len) as a native Column (codegen'd).

@@ -3,19 +3,22 @@ explicit skew handling.
 
 The reference's only "blocking key" is the user-supplied primary key of
 the equi-join (``compare.py:205-211``); at web scale the engine derives
-candidate-generation keys instead (SURVEY.md §2.3 "similarity join"):
+candidate-generation keys instead (SURVEY.md §2.3 "similarity join"),
+each an 8-byte hash (``block_keys: array<bigint>``):
 
-* host key — pages sharing a normalized URL host
-* MinHash-LSH band keys — token-shingle MinHash signatures, banded so
-  near-duplicate texts collide on at least one band key with high
-  probability
+* host key — ``xxhash64`` of the normalized URL host
+* MinHash-LSH band keys — token-shingle MinHash signatures, banded by
+  :func:`band_hashes` so near-duplicate texts collide on at least one
+  band key with high probability; ``dedup.minhash_lsh_pairs`` uses the
+  same band keys
 
 Shingling and the per-shingle xxhash64 are native Catalyst expressions;
 the 64-lane MinHash min runs in one Arrow kernel
 (:func:`attach_minhash_signature`, also used by
-``dedup.minhash_lsh_pairs``).  Signature computation is map-only,
-embarrassingly parallel, has no ml.Vector overhead, and is deterministic
-across cluster sizes.
+``dedup.minhash_lsh_pairs``), which shares its batch boundary and plan
+shape with the SimHash kernel (``functions.similarity``).  Signature
+computation is map-only, embarrassingly parallel, has no ml.Vector
+overhead, and is deterministic across cluster sizes.
 
 Candidate generation is one primitive, :func:`bucket_pairs` — a
 bucketed self-join with a hot-bucket star guard — shared by
@@ -37,6 +40,7 @@ from pyspark.sql import functions as F
 
 from data_reconciliation_spark.config import BlockingConfig
 from data_reconciliation_spark.functions.normalize import normalized_host, normalized_text
+from data_reconciliation_spark.functions.similarity import _ragged_hashes, attach_hash_kernel
 
 
 def token_shingles(text: Column | str, k: int = 3) -> Column:
@@ -110,10 +114,9 @@ def _minhash_lane_seeds(num_hashes: int, seed: int):
     return out
 
 
-def minhash_signature_batch(num_hashes: int = 64, seed: int = 0):
-    """Build the Arrow pandas UDF computing an array<bigint> MinHash
-    signature from an array of per-shingle hashes (use via
-    :func:`attach_minhash_signature`, which owns the plan shape).
+def _minhash_batch(hashed: pd.Series, lane_seeds) -> pd.Series:
+    """The MinHash kernel: an array<bigint> signature per row of
+    per-shingle hashes, one lane per entry of ``lane_seeds``.
 
     Per lane i, a min-wise hash over the shingle set; identical shingle
     sets => identical signatures at ANY parallelism.  The shingle STRING
@@ -126,48 +129,21 @@ def minhash_signature_batch(num_hashes: int = 64, seed: int = 0):
     values, only on determinism and min-wise uniformity — band keys
     hash the signature, and the LSH recall guarantee (identical sets
     always collide; similar sets collide with prob ~J^r per band) holds
-    for any uniform per-lane hash family.
+    for any uniform per-lane hash family.  None for a null row, all
+    ``LONG_MAX`` lanes for an empty one.
     """
     import numpy as np
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.functions import pandas_udf
 
-    lane_seeds = _minhash_lane_seeds(num_hashes, seed)
-    long_max = np.int64(_LONG_MAX)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _minhash_udf(hashed: pd.Series) -> pd.Series:
-        rows = hashed.to_numpy()
-        n = len(rows)
-        lens = np.fromiter(
-            (0 if r is None else len(r) for r in rows), dtype=np.int64, count=n
-        )
-        out = np.full((n, num_hashes), long_max, dtype=np.int64)
-        nz = lens > 0
-        if nz.any():
-            parts = [np.asarray(r) for r in rows if r is not None and len(r)]
-            for p in parts:
-                if p.dtype.kind == "f":
-                    # a null list slot in the Arrow batch degrades the
-                    # whole int64 values buffer to float64 (silent
-                    # precision loss beyond 2^53) — fail loudly
-                    raise TypeError(
-                        "minhash kernel: hash array arrived as float "
-                        "(null list slot upstream?)"
-                    )
-            flat = np.concatenate(parts).astype(np.int64).view(np.uint64)
-            keep = lens[nz]
-            starts = np.zeros(len(keep), dtype=np.int64)
-            if len(keep) > 1:
-                np.cumsum(keep[:-1], out=starts[1:])
-            with np.errstate(over="ignore"):
-                for i in range(num_hashes):
-                    mixed = _splitmix64(flat ^ lane_seeds[i]).view(np.int64)
-                    out[nz, i] = np.minimum.reduceat(mixed, starts)
-        result = [None if r is None else out[j].tolist() for j, r in enumerate(rows)]
-        return pd.Series(result, index=hashed.index)
-
-    return _minhash_udf
+    rows = hashed.to_numpy()
+    valid, flat, starts, _ = _ragged_hashes(rows)
+    out = np.full((len(rows), len(lane_seeds)), _LONG_MAX, dtype=np.int64)
+    if valid.any():
+        with np.errstate(over="ignore"):
+            for i, lane_seed in enumerate(lane_seeds):
+                mixed = _splitmix64(flat ^ lane_seed).view(np.int64)
+                out[valid, i] = np.minimum.reduceat(mixed, starts)
+    result = [None if r is None else out[j].tolist() for j, r in enumerate(rows)]
+    return pd.Series(result, index=hashed.index)
 
 
 def attach_minhash_signature(
@@ -177,59 +153,27 @@ def attach_minhash_signature(
     num_hashes: int = 64,
     seed: int = 0,
 ) -> DataFrame:
-    """Attach the Arrow-kernel MinHash signature as ``out_col``.
+    """Attach the Arrow-kernel MinHash signature (:func:`_minhash_batch`)
+    of the ``shingles`` array as ``out_col``, in the plan shape of
+    ``similarity.attach_hash_kernel``."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.functions import pandas_udf
 
-    DataFrame-level on purpose — the plan needs two Generate barriers
-    around the Arrow UDF, which a Column-returning API cannot provide:
+    lane_seeds = _minhash_lane_seeds(num_hashes, seed)
 
-    1. the native per-shingle hash (one codegen'd ``transform`` +
-       ``xxhash64`` pass) lands in its own projection, then an
-       explode-of-one barrier pins it — without the barrier,
-       CollapseProject inlines the higher-order-function tree into the
-       UDF argument, a shape the Python-UDF extraction rule fails to
-       extract over cached inputs (observed: raw PythonUDF left in an
-       interpreted projection -> INTERNAL_ERROR 'Cannot evaluate
-       expression' at execution);
-    2. the UDF runs over the resulting BARE ATTRIBUTE, and its output passes
-       through a second barrier so downstream repartition / shuffle-
-       partitioner expressions reference the Generate's output attribute
-       and can never inline the Unevaluable PythonUDF expression.
-    """
-    udf = minhash_signature_batch(num_hashes, seed)
+    def _minhash_udf(hashed: pd.Series) -> pd.Series:
+        return _minhash_batch(hashed, lane_seeds)
+
     hashed = F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)))
-    df = df.select("*", hashed.alias("__mh_hs0"))
-    df = df.select("*", F.explode(F.array("__mh_hs0")).alias("__mh_hs")).drop(
-        "__mh_hs0"
-    )
-    df = df.select("*", udf(F.col("__mh_hs")).alias("__mh_raw")).drop("__mh_hs")
-    return df.select("*", F.explode(F.array("__mh_raw")).alias(out_col)).drop(
-        "__mh_raw"
-    )
-
-
-def band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """array<string> LSH band keys: hash of each signature band, prefixed
-    with the band index so different bands never collide."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat(
-            F.lit("mh"),
-            b.cast("string"),
-            F.lit(":"),
-            F.xxhash64(F.slice(signature, b * rows_per_band + 1, rows_per_band), b).cast(
-                "string"
-            ),
-        ),
-    )
+    udf = pandas_udf(_minhash_udf, T.ArrayType(T.LongType()))
+    return attach_hash_kernel(df, hashed, udf, out_col)
 
 
 def band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
     """array<bigint> LSH band keys: ``xxhash64(band_slice, band_index)``
-    per band — the numeric twin of :func:`band_keys` for consumers that
-    only equi-join on the key (minhash_lsh_pairs).  Folding the band
-    index into the hash arguments keeps different bands collision-free
-    without the string concat + re-hash the string form pays; the self-
-    join then shuffles an 8-byte long instead of a ~25-byte string."""
+    per band.  Folding the band index into the hash arguments keeps
+    different bands collision-free without a prefix string; the self-
+    join shuffles an 8-byte long."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.xxhash64(
@@ -239,9 +183,11 @@ def band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
 
 
 def with_blocking_keys(pages: DataFrame, cfg: BlockingConfig | None = None) -> DataFrame:
-    """Add ``block_keys: array<string>`` (host key + LSH band keys)."""
+    """Add ``block_keys: array<bigint>``: ``xxhash64`` of the normalized
+    host, then the ``cfg.bands`` LSH band hashes.  A null host hashes to
+    the seed, so host-less pages share one block."""
     cfg = cfg or BlockingConfig()
-    # the signature is its own (Generate-pinned) column: band_keys
+    # the signature is its own (Generate-pinned) column: band_hashes
     # slices it once per band, and HOF lambdas re-evaluate inlined
     # subexpressions per element
     pages = attach_minhash_signature(
@@ -251,8 +197,8 @@ def with_blocking_keys(pages: DataFrame, cfg: BlockingConfig | None = None) -> D
         cfg.num_hashes,
     )
     combined = F.concat(
-        F.array(F.concat(F.lit("host:"), normalized_host("url"))),
-        band_keys(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band),
+        F.array(F.xxhash64(normalized_host("url"))),
+        band_hashes(F.col("__minhash_sig"), cfg.bands, cfg.rows_per_band),
     )
     return pages.withColumn("block_keys", combined).drop("__minhash_sig")
 
@@ -377,17 +323,16 @@ def candidate_pairs(
     keyed = with_blocking_keys(pages, cfg)
     blocks = exploded_blocks(keyed, id_col)
 
-    # Dictionary-encode both the row id and the block key to 8-byte
-    # hashes for the wide shuffle (a url string is ~50 bytes; the block
-    # table is the single largest exchange in the pipeline).  Hash
-    # collisions can only ADD candidate pairs (verified downstream by
-    # scoring) or merge two blocks — never lose a true pair beyond the
-    # band-probability already accepted.  Final outputs carry real ids
-    # (joined back from the compact mapping table).
+    # Dictionary-encode the row id to an 8-byte hash for the wide
+    # shuffle (a url string is ~50 bytes; the block table is the single
+    # largest exchange in the pipeline) — the block keys are 8-byte
+    # hashes already.  Hash collisions can only ADD candidate pairs
+    # (verified downstream by scoring) or merge two blocks — never lose
+    # a true pair beyond the band-probability already accepted.  Final
+    # outputs carry real ids (joined back from the compact mapping
+    # table).
     uid = dictionary_uid(F.col(id_col))
-    blocks = blocks.select(
-        F.xxhash64("block_key").alias("block_key"), uid.alias(id_col)
-    )
+    blocks = blocks.select("block_key", uid.alias(id_col))
 
     # Materialize the block table, salted so no single partition owns
     # a hot host: bucket_pairs consumes it several times, and the

@@ -48,27 +48,25 @@ from pyspark.sql import functions as F
 from data_reconciliation_spark.sources.state import CheckpointManager
 
 
-def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every neighbor larger than u to u's neighborhood minimum.
 
-    ``dedup=False`` skips the trailing ``distinct`` — one shuffle less
-    per round — valid when the consumer is ``_small_star``, whose
-    groupBy-min absorbs duplicates and whose own ``distinct`` cleans the
-    final edge set (the loop is latency-bound: fewer stages beats a
-    slightly fatter intermediate).
+    No trailing ``distinct`` — one shuffle less per round: the consumer
+    is ``_small_star``, whose groupBy-min absorbs duplicates and whose
+    own ``distinct`` cleans the final edge set (the loop is
+    latency-bound: fewer stages beats a slightly fatter intermediate).
     """
     und = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
         edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
     )
     mins = und.groupBy("u").agg(F.min("v").alias("mn"))
     mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-    out = (
+    return (
         und.join(mins, "u")
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("src"), F.col("m").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
-    return out.distinct() if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -298,7 +296,7 @@ def connected_components(
     for it in range(start_iter, max_iter):
         _round_t0 = _time.time()
         new_e, fp_new, avg_bytes = _checkpoint_with_fingerprint(
-            _small_star(_large_star(e, dedup=False))
+            _small_star(_large_star(e))
         )
         if on_round is not None:
             on_round(it, fp_new[0], _time.time() - _round_t0)
@@ -323,11 +321,10 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds"
         )
 
-    # stars: (v -> m) edges + centers' self-labels
+    # the converged edges are a star forest: each non-root node has
+    # exactly one edge, to its component's root, and no root is a src —
+    # so the edges label every non-root, and one (root, root) row per
+    # distinct dst labels the roots
     labels = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    centers = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
-    return (
-        labels.unionAll(centers)
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
-    )
+    roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component")).distinct()
+    return labels.unionAll(roots)

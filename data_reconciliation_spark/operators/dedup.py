@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from data_reconciliation_spark.config import BlockingConfig
 from data_reconciliation_spark.functions.normalize import normalized_text
-from data_reconciliation_spark.functions.similarity import attach_simhash64_md5
+from data_reconciliation_spark.functions.similarity import attach_simhash64_md5, hashed_jaccard
 from data_reconciliation_spark.lifecycle import register_cached
 from data_reconciliation_spark.operators.blocking import (
     attach_minhash_signature,
@@ -220,23 +220,10 @@ def minhash_lsh_pairs(
         # (exact string jaccard) still matches bit-for-bit.
         ta = per_doc.select(F.col(id_col).alias("id_a"), F.col("__th").alias("__th_a"))
         tb = per_doc.select(F.col(id_col).alias("id_b"), F.col("__th").alias("__th_b"))
-
-        def _jac(i):
-            union = F.size("__th_a") + F.size("__th_b") - i
-            return F.when(union == 0, F.lit(1.0)).otherwise(
-                i.cast("double") / union
-            )
-
-        jaccard = F.element_at(
-            F.transform(
-                F.array(F.size(F.array_intersect("__th_a", "__th_b"))), _jac
-            ),
-            1,
-        )
         pairs = (
             pairs.join(ta, "id_a")
             .join(tb, "id_b")
-            .withColumn("jaccard", jaccard)
+            .withColumn("jaccard", hashed_jaccard("__th_a", "__th_b"))
             .where(F.col("jaccard") >= verify_threshold)
             .select("id_a", "id_b", "jaccard")
         )

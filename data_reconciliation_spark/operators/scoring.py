@@ -52,6 +52,7 @@ from data_reconciliation_spark.functions.normalize import (
 )
 from data_reconciliation_spark.functions.similarity import (
     attach_simhash64_md5,
+    hashed_jaccard,
     jaro_winkler_batch,
 )
 from data_reconciliation_spark.operators import blocking as _blocking
@@ -133,26 +134,6 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
     return attach_simhash64_md5(prepared, "norm_text", "simhash")
 
 
-def _hashed_jaccard():
-    """Jaccard over precomputed token-hash arrays: ONE array_intersect
-    on plain attributes; |union| = |A|+|B|-|inter| so no union array is
-    ever built.  The intersect size is bound as a lambda variable via a
-    single-element transform so it is evaluated exactly once per pair
-    (a naive when/otherwise would re-run the intersect per reference)."""
-
-    def _jac(i):
-        union = F.size("tok_hashes_a") + F.size("tok_hashes_b") - i
-        return F.when(union == 0, F.lit(1.0)).otherwise(i.cast("double") / union)
-
-    return F.element_at(
-        F.transform(
-            F.array(F.size(F.array_intersect("tok_hashes_a", "tok_hashes_b"))),
-            _jac,
-        ),
-        1,
-    )
-
-
 def score_pairs(pairs: DataFrame, cfg: ScoringConfig | None = None) -> DataFrame:
     """Score candidate pairs carrying per-side payload columns
     ``canon_url_{a,b}, tok_hashes_{a,b}, simhash_{a,b}`` and optionally
@@ -178,7 +159,7 @@ def score_pairs(pairs: DataFrame, cfg: ScoringConfig | None = None) -> DataFrame
     feat = F.explode(
         F.array(
             F.struct(
-                _hashed_jaccard().alias("token_jaccard"),
+                hashed_jaccard("tok_hashes_a", "tok_hashes_b").alias("token_jaccard"),
                 F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
                 .cast("int")
                 .alias("simhash_hamming"),

@@ -22,10 +22,10 @@ from data_reconciliation_spark.sources.state import CheckpointManager
 # (materialize every shuffle, re-plan, schedule the next stage as a new
 # job) dominates wall time over the actual compute — measured 38.5s ->
 # 23.9s per 100k-page pass at local[16] with AQE off, steal < 0.002
-# (tools/e2e_variant_probe.py).  At warehouse volumes (> ~2M pages) the
-# stages run for minutes and AQE's runtime coalescing / skew splitting
-# is worth far more than its planning overhead, so the caller's AQE
-# setting stays in force.  The closure needs no such threshold: graphs
+# (tools/e2e_variant_probe.py as of commit 0b4e943).  At warehouse
+# volumes (> ~2M pages) the stages run for minutes and AQE's runtime
+# coalescing / skew splitting is worth far more than its planning
+# overhead, so the caller's AQE setting stays in force.  The closure needs no such threshold: graphs
 # small enough to be latency-bound finish on the driver
 # (operators/cluster.py).
 LATENCY_REGIME_PAGES = 2_000_000

@@ -426,3 +426,50 @@ def test_simhash_arrow_kernel_bit_exact(spark):
     assert got[0] is not None
     assert got[0] == simhash64_md5_py(" ".join(["x"] * 16383))
     assert got[1] is None
+
+
+def test_ragged_hashes_batch_boundary():
+    """The shared Arrow boundary of the MinHash and SimHash kernels:
+    null, empty and over-cap rows are invalid and contribute nothing;
+    the valid rows' hashes are concatenated in order with correct
+    offsets; a float row (a null list slot leaked upstream) raises."""
+    import numpy as np
+    import pandas as pd
+
+    from data_reconciliation_spark.functions.similarity import (
+        _ragged_hashes,
+        _simhash64_md5_batch,
+    )
+    from data_reconciliation_spark.operators.blocking import (
+        _minhash_batch,
+        _minhash_lane_seeds,
+    )
+
+    i64 = lambda *v: np.array(v, dtype=np.int64)  # noqa: E731
+    rows = pd.Series(
+        [i64(1, 2, 3), None, i64(), i64(-1), i64(4, 5, 6, 7), i64(8, 9)], dtype=object
+    ).to_numpy()
+    valid, flat, starts, lens = _ragged_hashes(rows)
+    assert valid.tolist() == [True, False, False, True, True, True]
+    assert lens.tolist() == [3, 1, 4, 2]
+    assert starts.tolist() == [0, 3, 4, 8]
+    assert flat.dtype == np.uint64
+    assert flat.view(np.int64).tolist() == [1, 2, 3, -1, 4, 5, 6, 7, 8, 9]
+
+    # the 4-hash row is over a cap of 3: dropped, offsets close up
+    valid, flat, starts, lens = _ragged_hashes(rows, max_len=3)
+    assert valid.tolist() == [True, False, False, True, False, True]
+    assert lens.tolist() == [3, 1, 2] and starts.tolist() == [0, 3, 4]
+    assert flat.view(np.int64).tolist() == [1, 2, 3, -1, 8, 9]
+
+    valid, flat, starts, lens = _ragged_hashes(np.array([None, i64()], dtype=object))
+    assert not valid.any() and len(flat) == len(starts) == len(lens) == 0
+
+    floats = pd.Series([i64(1), np.array([2.0, 3.0])], dtype=object)
+    with pytest.raises(TypeError, match="float"):
+        _ragged_hashes(floats.to_numpy())
+    # both kernels go through it
+    with pytest.raises(TypeError, match="float"):
+        _minhash_batch(floats, _minhash_lane_seeds(4, 0))
+    with pytest.raises(TypeError, match="float"):
+        _simhash64_md5_batch(floats)

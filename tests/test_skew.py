@@ -71,10 +71,14 @@ def test_salted_repartition_balances_hot_key(spark):
 
 def test_block_keys_deterministic_across_partitioning(spark):
     """Band keys must be identical regardless of input partitioning
-    (scaling-benchmark precondition)."""
-    a = exploded_blocks(
-        with_blocking_keys(generate_pages(spark, 300, 75, partitions=2))
-    )
+    (scaling-benchmark precondition), and are 8-byte hashes: the host
+    key plus one key per LSH band."""
+    cfg = BlockingConfig()
+    keyed = with_blocking_keys(generate_pages(spark, 300, 75, partitions=2), cfg)
+    assert keyed.schema["block_keys"].dataType.simpleString() == "array<bigint>"
+    sizes = keyed.select(F.size("block_keys").alias("n")).distinct().collect()
+    assert [r.n for r in sizes] == [1 + cfg.bands]
+    a = exploded_blocks(keyed)
     b = exploded_blocks(
         with_blocking_keys(generate_pages(spark, 300, 75, partitions=16))
     )
