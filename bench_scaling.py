@@ -330,24 +330,6 @@ def _gc_ms():
         total += it.next().getCollectionTime()
     return total
 
-# the pages input cache is the only RDD allowed to SURVIVE across
-# passes — everything else (incl. the closure loop's localCheckpoint
-# RDDs, which the ContextCleaner frees only lazily) is force-unpersisted
-# between passes; without this the first e2e run showed monotonically
-# drifting pass times (32s -> 61s over 8 passes) from block-manager
-# accumulation, which is harness leakage, not pipeline cost.
-input_rdd_ids = set()
-jmap0 = spark.sparkContext._jsc.getPersistentRDDs()
-for k in jmap0.keySet().toArray():
-    input_rdd_ids.add(int(str(k)))
-
-def _drop_noninput_rdds():
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(str(k)) not in input_rdd_ids:
-            jmap.get(k).unpersist()
-    spark.sparkContext._jvm.System.gc()
-
 samples = []; all_passes = []
 n_pairs = 0; n_matches = 0; n_clusters = 0
 attempt = 0
@@ -360,7 +342,6 @@ while len(samples) < 3 and attempt < 10:
     n_clusters = res.clusters.count()
     elapsed = time.time() - t0
     res.release()
-    _drop_noninput_rdds()
     steal_frac = (_steal_sec() - st0) / (elapsed * MACHINE_CORES)
     warm = attempt < 2   # C2/codegen needs two warmup passes at local[32]
     gc_delta_ms = _gc_ms() - g0

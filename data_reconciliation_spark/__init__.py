@@ -6,7 +6,7 @@ SURVEY.md).  The reference's pandas full-outer-join + per-row field-diff
 core (reference ``backend/analysis/compare.py:178-324``) becomes a
 three-stage DataFrame flow:
 
-1. blocking  (normalized URL host + MinHash-LSH band keys, salted)
+1. blocking  (normalized URL host + MinHash-LSH band keys, hot-block guard)
 2. pair scoring (Arrow-vectorized pandas UDFs; no per-row Python)
 3. transitive clustering (large-star/small-star label propagation)
 

@@ -168,7 +168,8 @@ class BlockingConfig:
     Every page is blocked on its normalized-URL host key plus its
     ``bands`` MinHash-LSH band keys, all 8-byte hashes;
     ``blocking.bucket_pairs`` self-joins the (id, block_key) table,
-    salted against hot hosts.  The MinHash knobs also configure
+    star-pairing blocks over ``max_block_size`` so a hot host stays
+    linear.  The MinHash knobs also configure
     ``dedup.minhash_lsh_pairs``, which bands with the same keys."""
 
     num_hashes: int = 64          # MinHash signature length

@@ -590,13 +590,14 @@ def attach_simhash64_md5(df, text, out_col: str):
 # ---------------------------------------------------------------------------
 
 def hashed_jaccard(a, b) -> Column:
-    """Jaccard of two distinct-hash arrays (token hashes after
-    ``array_distinct``): ONE ``array_intersect``, and |union| =
-    |A|+|B|-|inter| so no union array is ever built.  The intersect size
-    is bound as a lambda variable via a single-element transform so it
-    is evaluated exactly once per pair (a naive when/otherwise would
-    re-run the intersect per reference).  Two empty arrays give 1.0.
-    Used by ER scoring and ``dedup.minhash_lsh_pairs``' verify."""
+    """Set Jaccard of any two arrays without duplicate elements (token
+    hashes or n-gram strings after ``array_distinct``): ONE
+    ``array_intersect``, and |union| = |A|+|B|-|inter| so no union array
+    is ever built.  The intersect size is bound as a lambda variable via
+    a single-element transform so it is evaluated exactly once per pair
+    (a naive when/otherwise would re-run the intersect per reference).
+    Two empty arrays give 1.0.  Used by ER scoring, ``dedup.minhash_lsh_pairs``' verify and
+    ``dedup.ngram_jaccard_pairs``."""
     a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
 
     def jac(inter):

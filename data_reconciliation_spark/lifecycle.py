@@ -20,10 +20,10 @@ releasing prevents cached blocks accumulating until eviction pressure
 creates the storage-vs-execution memory contention measured in
 BENCH/scaling.json (round-3 verdict #1).
 
-Two operators keep a per-type form of the same contract:
+One operator keeps a per-type form of the same contract:
 ``ReconcileResult.release()`` (operators/reconcile.py; its
 ``reconcile_metrics`` and ``reconcile_exceptions`` siblings cache
-nothing) and ``release_index_source`` (sources/state.py).
+nothing).
 """
 
 from __future__ import annotations

@@ -24,12 +24,11 @@ Candidate generation is one primitive, :func:`bucket_pairs` — a
 bucketed self-join with a hot-bucket star guard — shared by
 :func:`candidate_pairs` and the three ``dedup`` kernels.
 
-Skew: hot blocking keys (one host holding 20% of a crawl) are handled
-two ways — (a) oversized blocks are star-paired to their min-id member
-instead of self-joined (content-based band keys retain recall inside
-them) and (b) ``salted_repartition`` spreads residual hot keys across
-``salt`` × partitions before the self-join (AQE's skew-join splitting
-covers the sort-merge side; salting covers the logical key itself).
+Skew: a hot blocking key (one host holding 20% of a crawl) is handled
+where its cost arises, in the self-join: an oversized block is
+star-paired to its min-id member instead of self-joined (content-based
+band keys retain recall inside it), and AQE's skew-join splitting
+covers whatever residual skew reaches the sort-merge join.
 """
 
 from __future__ import annotations
@@ -210,33 +209,6 @@ def exploded_blocks(pages_with_keys: DataFrame, id_col: str = "url") -> DataFram
     )
 
 
-def salted_repartition(
-    df: DataFrame,
-    key_col: str,
-    salt_buckets: int = 16,
-    id_col: str = "url",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Spread hot logical keys over ``salt_buckets`` shuffle keys.
-
-    AQE can split skewed *sort-merge partitions* at runtime, but the
-    pathological case — one blocking key ≫ a partition — needs the key
-    itself salted; the salt is deterministic in the row id so re-runs
-    and resumes see identical placement.
-
-    The partition count is pinned explicitly: a bare
-    ``repartition(cols...)`` exchange is AQE-coalescible and collapses a
-    small-but-about-to-explode dataset back into few partitions,
-    defeating the salt.
-    """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    return df.repartition(num_partitions, F.col(key_col), salt)
-
-
 def bucket_pairs(
     keyed: DataFrame,
     keys: list[str],
@@ -332,21 +304,21 @@ def candidate_pairs(
     # outputs carry real ids (joined back from the compact mapping
     # table).
     uid = dictionary_uid(F.col(id_col))
-    blocks = blocks.select("block_key", uid.alias(id_col))
 
-    # Materialize the block table, salted so no single partition owns
-    # a hot host: bucket_pairs consumes it several times, and the
-    # MinHash key expression must not be re-evaluated per consumer.
-    # Registered on the returned pairs — the caller (or the composing
-    # operator, see scoring.block_score_pipeline) releases it via
+    # Materialize the block table: bucket_pairs consumes it several
+    # times, and the MinHash key expression must not be re-evaluated per
+    # consumer.  No repartition first — every consumer exchanges on
+    # block_key (or broadcasts) by itself.  Registered on the returned
+    # pairs — the caller (or the composing operator, see
+    # scoring.block_score_pipeline) releases it via
     # lifecycle.release_cached after materializing.
     from pyspark.storagelevel import StorageLevel
 
     from data_reconciliation_spark.lifecycle import register_cached
 
-    blocks = salted_repartition(
-        blocks, "block_key", salt_buckets=16, id_col=id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    blocks = blocks.select("block_key", uid.alias(id_col)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     pairs = bucket_pairs(blocks, ["block_key"], id_col, cfg.max_block_size).distinct()
     if not keep_hashed_ids:
         # map compact uids back to real ids and re-orient so

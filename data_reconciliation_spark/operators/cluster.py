@@ -15,9 +15,11 @@ Design notes for 10^12-node scale:
 * O(log n) rounds for pathological chain graphs; real ER graphs
   (near-cliques) converge in 2-3 rounds.
 * Each round ends in ``localCheckpoint`` (lineage cut — without it the
-  plan doubles per iteration) and, when a checkpoint dir is given, a
-  parquet snapshot + manifest so a killed job resumes mid-iteration
-  (north rule).  See ``sources/state.py`` for the resume protocol.
+  plan doubles per iteration), and the round it supersedes is
+  unpersisted once the convergence check has read it.  When a
+  checkpoint dir is given, each round also writes a parquet snapshot +
+  manifest so a killed job resumes mid-iteration (north rule).  See
+  ``sources/state.py`` for the resume protocol.
 * Convergence is detected by an exact changed-edge count
   (anti-join of consecutive edge sets), one cheap job per round.
 * **Hybrid finish**: once the edge set fits a bounded driver budget
@@ -159,6 +161,16 @@ def _local_union_find(e: DataFrame) -> DataFrame:
     )
 
 
+def _free_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint``-ed DataFrame once
+    nothing reads it: the checkpoint's blocks otherwise stay in the
+    block manager until the ContextCleaner happens to collect the RDD.
+    A no-op for any other plan (a resumed parquet read)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -285,7 +297,9 @@ def connected_components(
     e, fp_prev, avg_bytes = _checkpoint_with_fingerprint(e)
 
     if _fits_local(fp_prev[0], avg_bytes):
-        return _local_union_find(e)
+        labels = _local_union_find(e)
+        _free_checkpoint(e)
+        return labels
 
     # (Fusing two rounds per materialization was also measured — 19.1s
     # vs 14-15s unfused — Catalyst recomputes the first round's subtree
@@ -309,13 +323,18 @@ def connected_components(
             changed = new_e.exceptAll(e).limit(1).count()
         if checkpoint is not None:
             checkpoint.save(it + 1, new_e)
+        # the previous round is read by nothing past this point: its
+        # successor is materialized and the exceptAll check has run
+        _free_checkpoint(e)
         e, fp_prev = new_e, fp_new
         if changed == 0:
             converged = True
             break
         if _fits_local(fp_prev[0], avg_bytes):
             # contracted under the driver budget mid-loop: finish there
-            return _local_union_find(e)
+            labels = _local_union_find(e)
+            _free_checkpoint(e)
+            return labels
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"

@@ -120,14 +120,11 @@ def ngram_jaccard_pairs(
         # consumed by the size histogram, the star branch and both
         # self-join sides; registered on the result for caller release
         base_cache = base = base.persist()
-    inter = F.size(F.array_intersect("grams_a", "grams_b"))
-    union = F.size(F.array_union("grams_a", "grams_b"))
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
     # each doc carries exactly one block key, so every pair comes out of
     # bucket_pairs once — no dedup shuffle needed
     out = (
         bucket_pairs(base, ["block"], id_col, max_block_size, carry=("grams",))
-        .withColumn("jaccard", jac)
+        .withColumn("jaccard", hashed_jaccard("grams_a", "grams_b"))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -340,16 +337,9 @@ def embedding_cosine_pairs(
         F.col(vec_col),
         _hyperplane_bits(F.col(vec_col), n_planes, dim).alias("bucket"),
     )
-    lhs = b.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket"
-    )
-    rhs = b.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket"
-    )
     return (
-        lhs.join(rhs, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_sim(F.col("va"), F.col("vb")))
+        bucket_pairs(b, ["bucket"], id_col, None, carry=(vec_col,))
+        .withColumn("cosine", cosine_sim(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

@@ -176,15 +176,6 @@ class ReconcileResult(ReconcileMetrics):
         once it has been consumed (it stays usable and recomputes)."""
         self._cached.unpersist()
 
-    def to_result(self) -> dict:
-        """Reference-shaped ``{match_pct, exceptions}`` (collects — use on
-        small/test data only; at scale, consume ``exceptions`` lazily)."""
-        pk_and_rest = [r.asDict() for r in self.exceptions.collect()]
-        for rec in pk_and_rest:
-            if rec.get("change_type") is None:
-                rec.pop("change_type", None)
-        return {"match_pct": self.match_pct, "exceptions": pk_and_rest}
-
 
 def _presence() -> tuple[Column, Column, Column]:
     """``(in_both, old_only, new_only)`` over the flagged join."""

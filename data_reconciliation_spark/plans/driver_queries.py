@@ -18,10 +18,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from data_reconciliation_spark.config import FieldRule
 from data_reconciliation_spark.functions.normalize import normalized_text
 from data_reconciliation_spark.functions.similarity import levenshtein_similarity
 from data_reconciliation_spark.operators.reconcile import (
+    _mismatch_expr,
     reconcile_exceptions,
     reconcile_metrics,
 )
@@ -282,10 +285,15 @@ def q_f3_tolerance_with_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("string")
         .alias("q_new"),
     )
-    to = F.col("q_old").try_cast("double")
-    tn = F.col("q_new").try_cast("double")
-    mismatch = F.when(to.isNull() | tn.isNull(), F.lit(True)).otherwise(
-        F.abs(to - tn) > 1.0
+    # the engine's own F3 predicate; neither column is ever null ("n/a"
+    # marks the unparsable values), so its null gates keep every row
+    mismatch = _mismatch_expr(
+        F.col("q_old"),
+        F.col("q_new"),
+        StringType(),
+        StringType(),
+        FieldRule(type="decimal", tolerance=1.0),
+        ignore_nulls=False,
     )
     return df.where(mismatch).select("l_orderkey", "l_linenumber", "q_old", "q_new")
 
@@ -995,8 +1003,9 @@ def q_er_link_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{row['n_true']} true entities exceeds 10% split tolerance"
         )
     # the invariant checks above consumed scored_pairs via the closure;
-    # clusters reads only the localCheckpoint-ed label table, so the
-    # scoring caches can be freed before handing the DF to the driver
+    # clusters reads only the closure's labels (a local relation after
+    # the driver finish), so the scoring caches can be freed before
+    # the query returns
     res.release()
     return clusters
 

@@ -57,8 +57,9 @@ class LinkResult:
         blocking/scoring stages registered (lifecycle contract; see
         ``data_reconciliation_spark.lifecycle``).  Call after the result
         DataFrames have been written/consumed.  ``clusters`` stays
-        valid afterwards — the closure rounds are localCheckpoint-ed,
-        so it does not recompute the scoring stage;
+        valid afterwards without recomputing the scoring stage: its
+        labels are a local relation after the driver finish, and the
+        final localCheckpoint-ed closure round otherwise;
         ``scored_pairs``/``matches`` recompute if re-consumed."""
         from data_reconciliation_spark.lifecycle import release_cached
 

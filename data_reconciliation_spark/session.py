@@ -22,9 +22,9 @@ def build_session(
     """Build (or reuse) a SparkSession.
 
     AQE is enabled so shuffle partition counts self-tune at scale and
-    skewed sort-merge joins are split at runtime; explicit salting of
-    blocking keys (operators/blocking.py) covers the skew AQE cannot see
-    (hot *logical* keys before the shuffle exists).
+    skewed sort-merge joins are split at runtime; the blocking
+    self-join's hot-block guard (operators/blocking.py) covers the skew
+    AQE cannot see (a hot *logical* key's quadratic pair count).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")

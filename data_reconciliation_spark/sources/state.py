@@ -25,6 +25,8 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_reconciliation_spark.lifecycle import register_cached, release_cached
+
 
 def dense_sorted_index(
     df: DataFrame, idx_name: str = "exc_idx", num_partitions: int | None = None
@@ -61,7 +63,9 @@ def dense_sorted_index(
         offsets.append((pid, acc))
         acc += cnt
     if not offsets:
-        return df.withColumn(idx_name, F.lit(0).cast("long")).limit(0)
+        return register_cached(
+            df.withColumn(idx_name, F.lit(0).cast("long")).limit(0), parted
+        )
     offs = spark.createDataFrame(offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(*sort_cols)
     out = (
@@ -70,22 +74,11 @@ def dense_sorted_index(
         .withColumn(idx_name, (F.col("__off") + F.col("__rn")).cast("long"))
         .drop("__pid", "__rn", "__off")
     )
-    # expose the persisted source so callers can release the cached
-    # blocks once `out` has been materialized (unpersisting EARLIER
-    # would re-sample the range boundaries and desynchronize the
-    # offsets from the partitioning)
-    out._dsi_persisted_source = parted
-    return out
-
-
-def release_index_source(df: DataFrame) -> None:
-    """Unpersist the cached range-partitioned source behind a
-    :func:`dense_sorted_index` result.  Call AFTER the result has been
-    fully materialized (written / collected); a long-running driver that
-    skips this leaks cached blocks per call."""
-    src = getattr(df, "_dsi_persisted_source", None)
-    if src is not None:
-        src.unpersist()
+    # the caller releases the persisted source (lifecycle.release_cached)
+    # once `out` has been materialized: unpersisting EARLIER would
+    # re-sample the range boundaries and desynchronize the offsets from
+    # the partitioning
+    return register_cached(out, parted)
 
 
 class CheckpointManager:
@@ -255,7 +248,7 @@ class AuditStore:
         try:
             self._write(indexed.withColumn("run_id", F.lit(run_id)), "exceptions")
         finally:
-            release_index_source(indexed)
+            release_cached(indexed)
         return run_id
 
     def read_runs(self) -> DataFrame | None:

@@ -14,7 +14,7 @@ the two-parallelism scaling benchmark an apples-to-apples comparison.
 
 Skew is built in deliberately: ~20% of rows land on one hot host
 (FIXTURES.md: "one hot host holding >=20% of rows") to exercise the
-salting path.
+hot-block guard of the blocking self-join.
 """
 
 from __future__ import annotations

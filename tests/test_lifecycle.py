@@ -2,11 +2,11 @@
 that persists an internal intermediate must hand its caller a release
 handle, and releasing must leave the session's CacheManager empty.
 
-The assertion inspects Spark's CacheManager (which tracks every
-DataFrame-level persist) rather than ``getPersistentRDDs`` because
-``localCheckpoint`` — used intentionally by the closure loop, with
-RDD-level cleanup owned by the ContextCleaner — registers RDD-level
-persists that are NOT caller-visible caches.
+Most assertions inspect Spark's CacheManager, which tracks every
+DataFrame-level persist.  The closure's ``localCheckpoint`` rounds are
+RDD-level persists the CacheManager does not see, so
+:func:`test_release_leaves_no_persistent_rdd` checks
+``getPersistentRDDs`` as well.
 """
 
 from __future__ import annotations
@@ -102,8 +102,41 @@ def test_link_release(spark, clean_cache):
     assert not _cache_empty(spark)
     res.release()
     assert _cache_empty(spark)
-    # clusters reads the localCheckpoint-ed label table — still valid
+    # clusters reads the closure's local label relation — still valid
     assert res.clusters.count() == 120
+
+
+def _persistent_rdds(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(str(k)) for k in jmap.keySet().toArray()}
+
+
+def test_release_leaves_no_persistent_rdd(spark, clean_cache):
+    """Every closure checkpoint is unpersisted once nothing reads it:
+    ``link()`` + ``release()`` (driver finish) leaves no RDD behind, and
+    a forced-distributed closure keeps only its final round, which backs
+    the returned labels."""
+    import networkx as nx
+
+    from data_reconciliation_spark.operators.cluster import connected_components
+    from data_reconciliation_spark.plans.pipeline import link
+    from data_reconciliation_spark.testgen import generate_pages
+
+    pages = generate_pages(spark, n_rows=120, n_entities=30, seed=7)
+    before = _persistent_rdds(spark)
+    res = link(pages)
+    res.scored_pairs.count()
+    assert res.clusters.count() == 120
+    res.release()
+    assert _persistent_rdds(spark) - before == set()
+
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(60)]
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    before = _persistent_rdds(spark)
+    labels = connected_components(edges, local_finish_threshold=0)
+    assert len(_persistent_rdds(spark) - before) == 1
+    want = {n: min(c) for c in nx.connected_components(nx.Graph(chain)) for n in c}
+    assert {r.node: r.component for r in labels.collect()} == want
 
 
 def test_reconcile_lazy_metrics_no_cache(spark, clean_cache):

@@ -1,6 +1,5 @@
 """Skew handling: oversized hot-host blocks are excluded from pairwise
-generation yet recall survives via content band keys; salted
-repartition balances hot keys across partitions."""
+generation yet recall survives via content band keys."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ from data_reconciliation_spark.config import BlockingConfig
 from data_reconciliation_spark.operators.blocking import (
     candidate_pairs,
     exploded_blocks,
-    salted_repartition,
     with_blocking_keys,
 )
 from data_reconciliation_spark.testgen import HOT_HOST, generate_pages
@@ -42,31 +40,6 @@ def test_hot_block_guard_keeps_band_recall(spark):
     found = truth.join(cands, ["id_a", "id_b"], "left_semi").count()
     recall = found / n_truth
     assert recall >= 0.98, f"band recall {recall:.4f} (found {found}/{n_truth})"
-
-
-def test_salted_repartition_balances_hot_key(spark):
-    """One key holding 90% of rows: salting spreads it so no partition
-    owns more than a salt-bucket's share."""
-    n = 10_000
-    df = spark.range(n).select(
-        F.when(F.col("id") % 10 != 0, F.lit("hot")).otherwise(
-            F.concat(F.lit("k"), (F.col("id") % 97).cast("string"))
-        ).alias("block_key"),
-        F.col("id").cast("string").alias("url"),
-    )
-    salted = salted_repartition(
-        df, "block_key", salt_buckets=16, id_col="url", num_partitions=16
-    )
-    sizes = [
-        r["cnt"]
-        for r in salted.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    ]
-    # unsalted, one partition would own ~9000 rows; salted across 16
-    # buckets/partitions the hot key's share per partition collapses
-    assert max(sizes) < 3_000, sizes
-    assert len([s for s in sizes if s > 0]) >= 8, sizes
 
 
 def test_block_keys_deterministic_across_partitioning(spark):

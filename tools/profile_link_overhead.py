@@ -81,18 +81,6 @@ def main() -> None:
     ).persist()
     pages.count()
 
-    input_rdd_ids = set()
-    jmap0 = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap0.keySet().toArray():
-        input_rdd_ids.add(int(str(k)))
-
-    def _drop_noninput_rdds():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            if int(str(k)) not in input_rdd_ids:
-                jmap.get(k).unpersist()
-        spark.sparkContext._jvm.System.gc()
-
     def one_pass():
         t0 = time.time()
         res = link(pages)
@@ -100,7 +88,6 @@ def main() -> None:
         n_clusters = res.clusters.count()
         elapsed = time.time() - t0
         res.release()
-        _drop_noninput_rdds()
         return elapsed, n_pairs, n_clusters
 
     for w in range(args.warmups):
